@@ -18,7 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from wfc3_cte_monitor_spark.plans.registry import load_all, set_arm_filter
+from wfc3_cte_monitor_spark.plans.registry import load_all
 from wfc3_cte_monitor_spark.session import get_spark
 
 # Headline queries: the flagship DAG + one representative per operator
@@ -54,75 +54,6 @@ HEADLINE = [
     "ev01_event_windows",
 ]
 
-# ROUND-OVER-ROUND CONTINUITY (r6 verdict ask #2): the headline total
-# moves every round because new oracle-gated arms join existing queries,
-# which makes "did the engine get faster" an attribution exercise. The
-# FROZEN subtotal times each query restricted to its PREVIOUS-round arm
-# set, so round N's frozen_total vs round N-1's TOTAL is one
-# subtraction. Arms added after the previous round's boundary are listed
-# here per query as (arm_column, frozen_arm_values); queries not listed
-# are unchanged and reuse their full-run best. New arms join the frozen
-# set only at the NEXT round boundary (update this dict then).
-#
-# r10 comparison rule: BENCH_r10's frozen_total (t01 replaced by its
-# PINNED r9 twin, everything else live) subtracts from BENCH_r09.json's
-# TOTAL (82.852 raw on a host_ratio-1.309 window) — both numbers
-# measure the full r9 arm set; host drift reads off the sentinels.
-FROZEN_ARMS: dict[str, tuple[str, tuple[str, ...]]] = {
-    # r11 boundary: EMPTY on purpose (same reasoning as r10). The one
-    # arm-set delta this round (t01 gains the dictD family) is carried
-    # by the PINNED r10 code twin below — pinned code has no D arms,
-    # so t01#frozen is exactly the r10 arm set on r10 code, which
-    # dominates an arm-restriction on current code (and a FROZEN_ARMS
-    # entry would SHADOW the pinned twin in the builder wiring). The
-    # machinery stays for rounds where a changed query has no pinned
-    # twin.
-}
-
-# PINNED-CODE twins (r8 verdict ask #2): the r8 frozen twin restricted
-# ARMS on CURRENT code, so shared-stage code changes leaked into the
-# "frozen" number (t01#frozen 10.49s was unexplainable by host drift
-# alone). A pinned twin is a verbatim COPY of the previous round's plan
-# body, never edited after its boundary — timing it alongside the live
-# query makes `live − pinned` the cost of this round's code changes and
-# `pinned_rN vs pinned_r{N-1}` pure host drift, with no arm-set or
-# shared-stage ambiguity. Re-pin a NEW module at each future boundary
-# where the query's code changed; SCALING.md records each re-pin.
-PINNED_TWINS: dict[str, tuple[str, str]] = {
-    # re-pinned at the r14 boundary (r13 verdict ask #4): the live t01
-    # changed in r13 (counts0 round-0 pair-count reuse + the url-arm
-    # SaltDecision aggregate), so the r12 twin stopped isolating r14's
-    # changes. frozen_t01_r13 was PRE-pinned at the END of r13
-    # (scripts/gen_frozen_t01_r13.py) and verified row-identical to
-    # live t01 at sf0.001 + sf0.01 before any r14 edit;
-    # tests/test_plan_shape.py's pin test imports and compares THIS pin
-    # every run (continuous verification, not trust-from-pin-time).
-    # frozen_t01_r12 retired at the flip. In BENCH_r14, live − pinned
-    # prices exactly ROUND-14's t01 code changes; pinned_r14 vs
-    # BENCH_r13's live t01 (23.65 s driver window) is pure host drift
-    # on code-identical plans.
-    #
-    # R15 BUILDER: if round 14 changes t01, pre-pin a fresh
-    # plans/frozen_t01_r14.py at the r14 close (gen script pattern),
-    # flip this entry, retire frozen_t01_r13, port the pin test, record
-    # in SCALING.md. Do NOT flip before the driver writes BENCH_r14.
-    "t01_token_stats": (
-        "wfc3_cte_monitor_spark.plans.frozen_t01_r13",
-        "t01_token_stats_r13",
-    ),
-    # SECOND pin (r12 verdict ask #3): an I/O-shaped control. The r12
-    # window's io_ratio 1.34 moved zero-code-change queries +26-48%
-    # (s01 +48%, the most I/O-shaped query) with no per-query control
-    # outside t01; this pin gives `live − pinned` coverage at the
-    # I/O-shaped end of the suite. Pinned at the r13 boundary from the
-    # r12-close body (s01 unchanged at pin time), verified
-    # row-identical at sf0.001 + sf0.01.
-    "s01_header_derivations": (
-        "wfc3_cte_monitor_spark.plans.frozen_s01_r12",
-        "s01_header_derivations_r12",
-    ),
-}
-
 # HOST-DRIFT SENTINEL (r7 verdict ask #2): a PINNED workload — fixed
 # literal data, JVM-only (codegen range scan + hash agg, no I/O, no
 # Python), never to be touched across rounds — timed in the same
@@ -130,7 +61,6 @@ PINNED_TWINS: dict[str, tuple[str, str]] = {
 # reference below turns "is this host window slower than last round's"
 # from a forensic multi-run session into one recorded ratio:
 #   host_ratio = sentinel_s / SENTINEL_REF_S
-#   frozen_total_norm = frozen_total / host_ratio
 # SENTINEL_REF_S was pinned from quiet-window r8 measurements on the
 # round-8 host; it is an ANCHOR, not a prediction — only the ratio's
 # round-over-round movement carries meaning. Do not re-pin it unless the
@@ -145,9 +75,8 @@ SENTINEL_REF_S = 0.97
 # workload is a fixed parquet scan + filter + hash agg over a
 # DETERMINISTIC file (generated from spark.range once, content
 # identical whenever regenerated, never edited). Both ratios are
-# emitted; frozen_total_norm stays CPU-sentinel-based (protocol
-# continuity), the I/O ratio is the recorded second witness that says
-# whether an I/O-heavy query's drift tracks the host's I/O path.
+# emitted; the I/O ratio is the second witness that says whether an
+# I/O-heavy query's drift tracks the host's I/O path.
 # SENTINEL_IO_REF_S pinned from quiet-window r9 measurements on the
 # round-9 host — an ANCHOR, not a prediction (same rule as above).
 IO_SENTINEL_PATH = "/tmp/wfc3_bench_io_sentinel_v1"
@@ -168,32 +97,14 @@ SENTINEL_IO_REF_S = 0.62
 # sweep. What each sentinel CAN attribute (recorded in SCALING.md):
 # CPU/I-O ratios move → instantaneous host pressure on that path;
 # sustained ratio moves with quiet short sentinels → sustained-load
-# throttling (the r10 signature); ALL quiet while live−pinned moves →
-# engine code cost (only the twin separates code from host). Within a
+# throttling (the r10 signature). Separating engine code cost from host
+# drift is a two-revision question: run perfbench on both commits. Within a
 # session, min is the anchor comparator (noise only inflates) and the
 # min↔median spread is the sustained-pressure signal — both emitted.
 # SENTINEL_SUST_REF_S pinned from quiet-window r11 measurements on the
 # round-11 host (6 warm passes: 12.85 8.74 8.50 7.90 8.27 8.31 → min
 # 7.90, median 8.5) — an ANCHOR, not a prediction (same rule as above).
 SENTINEL_SUST_REF_S = 7.9
-
-
-def _frozen_builder(specs, name: str, col: str, vals: tuple[str, ...]):
-    def build(spark, sf_dir):
-        # two pruning mechanisms, both needed: set_arm_filter skips arms
-        # whose CONSTRUCTION is eager (driver-side convergence collects),
-        # the .where lets Catalyst constant-fold lazily-built union
-        # branches whose literal tag can't match down to empty relations.
-        set_arm_filter({name: set(vals)})
-        try:
-            from pyspark.sql import functions as F
-
-            df = specs[name].fn(spark, sf_dir)
-            return df.where(F.col(col).isin(*vals)) if col in df.columns else df
-        finally:
-            set_arm_filter(None)
-
-    return build
 
 
 def _t01_salt_decision() -> dict | None:
@@ -220,40 +131,6 @@ def main() -> None:
 
     specs = load_all()
     names = [n for n in HEADLINE if n in specs]
-
-    # Builders: every headline query plus a "<name>#frozen" twin per
-    # query that either gained arms since the boundary (FROZEN_ARMS,
-    # arm-restriction on current code) or has a pinned-code copy
-    # (PINNED_TWINS, previous round's verbatim plan body) — measured
-    # with the SAME pass/probe/redo machinery.
-    builders = {n: specs[n].fn for n in names}
-    frozen_keys: dict[str, str] = {}
-    for n, (col, vals) in FROZEN_ARMS.items():
-        if n in names:
-            key = n + "#frozen"
-            builders[key] = _frozen_builder(specs, n, col, vals)
-            frozen_keys[n] = key
-    import importlib
-
-    for n, (mod_name, fn_name) in PINNED_TWINS.items():
-        if n in names and n not in frozen_keys:
-            key = n + "#frozen"
-            builders[key] = getattr(importlib.import_module(mod_name), fn_name)
-            frozen_keys[n] = key
-    run_list = names + sorted(frozen_keys.values())
-
-    # Twin placement is RANDOMIZED within each sweep (deterministic
-    # seed per pass) instead of appended at the end: the r8 end-of-
-    # sweep slot put every twin sample in the same (documented slow)
-    # window, biasing twin-vs-live deltas.
-    import random
-
-    def sweep_order(seed: int) -> list[str]:
-        order = list(names)
-        rng = random.Random(seed)
-        for key in sorted(frozen_keys.values()):
-            order.insert(rng.randrange(len(order) + 1), key)
-        return order
 
     # Warm the JVM + parquet footer caches with the cheapest query once.
     specs[names[0]].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
@@ -354,7 +231,7 @@ def main() -> None:
         _new_stage_totals()  # flush probe/warmup stages past the high-water
         g0, c0 = _gc_ms(), _cpu_ms()
         t0 = time.perf_counter()
-        builders[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+        specs[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         elapsed = time.perf_counter() - t0
         stage_log.setdefault(name, []).append(_new_stage_totals())
         gc_log.setdefault(name, []).append(_gc_ms() - g0)
@@ -529,7 +406,7 @@ def main() -> None:
             spark.conf.set(DISABLE_CONF, "true")
             try:
                 plan = (
-                    builders[name](spark, sf_dir)
+                    specs[name].fn(spark, sf_dir)
                     ._jdf.queryExecution().executedPlan().toString()
                 )
             finally:
@@ -538,7 +415,7 @@ def main() -> None:
         return uses_python[name]
 
     # per query: list of (elapsed, jvm_before, jvm_after, py_before, py_after)
-    all_passes: dict[str, list[tuple[float, float, float, float, float]]] = {n: [] for n in run_list}
+    all_passes: dict[str, list[tuple[float, float, float, float, float]]] = {n: [] for n in names}
 
     # Three passes per query, INTERLEAVED across queries (pass 1 of every
     # query, then pass 2, then pass 3): consecutive per-query passes let
@@ -563,11 +440,11 @@ def main() -> None:
 
     probe()  # settle + first sample
     last_probe = probe()
-    for p_i in range(n_passes):
+    for _ in range(n_passes):
         sentinel()  # one pinned-workload sample per interleaved sweep
         io_sentinel()
         sust_sentinel()
-        for name in sweep_order(1000 + p_i):
+        for name in names:
             elapsed = run_once(name)
             p_after = probe()
             all_passes[name].append((elapsed, *last_probe, *p_after))
@@ -599,7 +476,7 @@ def main() -> None:
     # Globally bounded so a fully-loaded host can't run away.
     redo_budget = 20 if n_passes >= 2 else 0
     n_redone = 0
-    for name in run_list:
+    for name in names:
         tries = 0
         while tries < 3 and redo_budget > 0:
             if any(clean(name, p) for p in all_passes[name][1:]):
@@ -620,203 +497,11 @@ def main() -> None:
         sentinel()
         io_sentinel()
         sust_sentinel()
-        for name in sweep_order(1999):
+        for name in names:
             elapsed = run_once(name)
             p_after = probe()
             all_passes[name].append((elapsed, *last_probe, *p_after))
             last_probe = p_after
-
-    # --- per-arm timing manifest (r8 verdict ask #4) ----------------------
-    # The mega-queries host 7-15 tagged-union arms each; their headline
-    # numbers are unreadable without per-arm prices, which until r8 were
-    # narrated as session-prose A/Bs. One arm-restricted timing per arm,
-    # machine-emitted, JVM fully warm (runs after the scheduled passes):
-    #   only:<arm>    — the arm alone plus the shared stages it pulls in
-    #                   (NOT a marginal price: shared stages are counted
-    #                   in every arm's 'only' time);
-    #   without:<arm> — for eager pseudo-arms (construction-time work
-    #                   outside the tag column), the complement run; the
-    #                   marginal price is queries_best[q] − without:<arm>.
-    # Arm sets are DISCOVERED from the result relation (distinct over
-    # the tag column), so the manifest tracks the code with no
-    # hand-kept list to go stale.
-    ARM_PRICE_QUERIES = [
-        "t01_token_stats", "t02_text_profile", "d03_minhash_lsh",
-        "ev01_event_windows", "d02_lsh_dedup_pipeline",
-    ]
-    PSEUDO_ARMS = {  # set_arm_filter-consulted construction gates
-        "t02_text_profile": ("tri",),
-        "d02_lsh_dedup_pipeline": ("incr_cc",),
-    }
-    ARM_PRICE_TOTAL_BUDGET_S = 1500.0  # wall gate: never threaten the driver timeout
-    arm_prices: dict[str, dict[str, float]] = {}
-
-    def _timed_noop(df) -> float:
-        t0 = time.perf_counter()
-        df.write.mode("overwrite").format("noop").save()
-        el = time.perf_counter() - t0
-        spark.sparkContext._jvm.System.gc()  # same cleaner hygiene as run_once
-        return el
-
-    if n_passes >= 3:
-        from pyspark.sql import functions as _F
-
-        for qname in ARM_PRICE_QUERIES:
-            if qname not in specs:
-                continue
-            if time.perf_counter() - bench_t0 > ARM_PRICE_TOTAL_BUDGET_S:
-                arm_prices.setdefault("_truncated", {})[qname] = -1.0
-                continue
-
-            # the budget is re-checked INSIDE the per-arm loop too (r9
-            # ADVICE: checking only between queries let one query's
-            # full sweep — untimed arm discovery + up to ~16 timed arm
-            # runs — overshoot the wall gate by minutes); a partial
-            # entry carries an explicit truncation marker so the
-            # manifest never reads as a complete sweep when it isn't.
-            def _over_budget() -> bool:
-                return time.perf_counter() - bench_t0 > ARM_PRICE_TOTAL_BUDGET_S
-
-            entry: dict[str, float] = {}
-            df_full = specs[qname].fn(spark, sf_dir)
-            tag_col = next((c for c in ("which", "kind") if c in df_full.columns), None)
-            truncated = False
-            if tag_col is not None:
-                vals = sorted(
-                    r[0] for r in df_full.select(tag_col).distinct().collect()
-                    if r[0] is not None
-                )
-                for v in vals:
-                    if _over_budget():
-                        truncated = True
-                        break
-                    set_arm_filter({qname: {v}})
-                    try:
-                        d = specs[qname].fn(spark, sf_dir)
-                        entry["only:" + v] = round(
-                            _timed_noop(d.where(_F.col(tag_col) == v)), 3
-                        )
-                    finally:
-                        set_arm_filter(None)
-            for pv in PSEUDO_ARMS.get(qname, ()):
-                if truncated or _over_budget():
-                    truncated = True
-                    break
-                # complement run: every tag arm, pseudo-arm excluded
-                set_arm_filter({qname: {"__all_but__" + pv}})
-                try:
-                    entry["without:" + pv] = round(
-                        _timed_noop(specs[qname].fn(spark, sf_dir)), 3
-                    )
-                finally:
-                    set_arm_filter(None)
-            if truncated:
-                entry["_truncated_mid_sweep"] = -1.0
-                arm_prices.setdefault("_truncated", {})[qname] = -1.0
-            arm_prices[qname] = entry
-
-    # --- eager-construction pricing (r11 verdict ask #4) ------------------
-    # Families whose cost lands at plan-BUILD time (driver-side collects
-    # while fn() constructs the DataFrame: d02's incremental-CC store
-    # build, t01's dictD training rounds) are invisible to the per-arm
-    # noop timer above — the arm manifest priced the dictD family's lazy
-    # arms at ~2.9 s and left the eager slice attributable only by
-    # subtraction. construction_s times the fn() CALL ITSELF with the
-    # family's arms requested (the construction gates consult
-    # active_arms, so exactly that family's eager work runs), plus a
-    # "__none__" baseline with every eager gate closed (pure lazy plan
-    # assembly). SEMANTICS: a family's eager scans EXECUTE their shared
-    # lazy prerequisites (t01's tokenize+hash checkpoint, d02's shingle
-    # pipeline), so construction_s[fam] is "when the wall is paid"
-    # (query wall ≈ construction + noop-write residue; the write then
-    # reuses the checkpoints), NOT the family's marginal price — that
-    # stays full-vs-excluded (the twin / dictd_price_probe numbers).
-    EAGER_FAMILIES: dict[str, dict[str, frozenset[str]]] = {
-        "t01_token_stats": {
-            "dictD": frozenset({"dictD", "mergeD", "encodeD", "inferD", "decodeD"}),
-            # any single lazy arm name closes every eager gate
-            "__none__": frozenset({"doc"}),
-        },
-        "d02_lsh_dedup_pipeline": {
-            "incr_cc": frozenset({"incr_cc"}),
-            "__none__": frozenset({"full"}),
-        },
-    }
-    construction_s: dict[str, dict[str, float]] = {}
-    construction_samples: dict[str, dict[str, int]] = {}
-    if n_passes >= 3:
-        # min of 2 INTERLEAVED samples (r12 ADVICE: every other bench
-        # number is best-of-N across sweeps; a single-sample
-        # construction_s put one host burst directly in the artifact).
-        # The budget gate runs per FAMILY, not per query, so a slow
-        # first family can't blow the wall mid-query; families cut
-        # short carry an explicit sample count for the reader.
-        _cons_raw: dict[str, dict[str, list[float]]] = {}
-        for _rep in range(2):
-            for qname, fams in EAGER_FAMILIES.items():
-                if qname not in specs:
-                    continue
-                for fam, fam_arms in fams.items():
-                    got = _cons_raw.setdefault(qname, {}).setdefault(fam, [])
-                    if time.perf_counter() - bench_t0 > ARM_PRICE_TOTAL_BUDGET_S:
-                        if not got:
-                            construction_s.setdefault("_truncated", {})[qname] = -1.0
-                        continue
-                    set_arm_filter({qname: fam_arms})
-                    try:
-                        t0 = time.perf_counter()
-                        specs[qname].fn(spark, sf_dir)
-                        got.append(time.perf_counter() - t0)
-                    finally:
-                        set_arm_filter(None)
-        for qname, fams in _cons_raw.items():
-            for fam, samples in fams.items():
-                # a family cut to ZERO samples is still NAMED (count 0)
-                # so the reader can tell skipped from never-defined
-                construction_samples.setdefault(qname, {})[fam] = len(samples)
-                if samples:
-                    construction_s.setdefault(qname, {})[fam] = round(
-                        min(samples), 3
-                    )
-
-    # Self-describing marginal (r12 verdict ask #5): construction_s[fam]
-    # INCLUDES the shared lazy prerequisites the family's eager scans
-    # execute (t01's tokenize+hash checkpoint), so the readable marginal
-    # is family − __none__ — emitted here so BENCH_DETAIL can't be
-    # misread without SCALING.md in hand.
-    construction_marginal_s: dict[str, dict[str, float]] = {}
-    for qname, fams in construction_s.items():
-        if qname.startswith("_") or "__none__" not in fams:
-            continue
-        base = fams["__none__"]
-        for fam, v in fams.items():
-            if fam != "__none__":
-                construction_marginal_s.setdefault(qname, {})[fam] = round(
-                    v - base, 3
-                )
-
-    # --- arm-placement policy hook (r11 verdict ask #5) -------------------
-    # COVERAGE.md §"Arm-placement policy" sets a per-arm price ceiling:
-    # a new family lands on a BENCHED host only if its steady-state cost
-    # belongs in the headline number, and any 'only:' arm price above
-    # the ceiling must cite a SCALING.md justification. This emits the
-    # violations into every artifact so the policy is checked by the
-    # bench, not by prose review. (only: prices include the shared
-    # stages an arm pulls in, so the shared-substrate floor — tokenize +
-    # per-doc stats for t01 — sits in every arm's price; the ceiling is
-    # set above that floor.)
-    ARM_PRICE_CEILING_S = 2.5
-    arm_ceiling_flags: dict[str, dict[str, float]] = {}
-    for qname, entry in arm_prices.items():
-        if qname.startswith("_"):
-            continue
-        over = {
-            k: v
-            for k, v in entry.items()
-            if k.startswith("only:") and v > ARM_PRICE_CEILING_S
-        }
-        if over:
-            arm_ceiling_flags[qname] = over
 
     def best_of(name: str) -> float:
         """Per-query headline: best over ALL passes. Host noise can only
@@ -834,7 +519,7 @@ def main() -> None:
     timings_warm = {
         n: round(min(t[0] for t in (p[1:] or p)), 3) for n, p in all_passes.items()
     }
-    timings_best = {n: round(best_of(n), 3) for n in run_list}
+    timings_best = {n: round(best_of(n), 3) for n in names}
     passes = {n: [round(t[0], 3) for t in p] for n, p in all_passes.items()}
     clean_flags = {
         n: [clean(n, p) for p in ps] for n, ps in all_passes.items()
@@ -872,20 +557,12 @@ def main() -> None:
                 })
 
     total = round(sum(timings_best[n] for n in names), 3)
-    # Frozen subtotal: previous round's arm set per query — the round-
-    # over-round comparable number (changed queries use their #frozen
-    # twin's best).
-    frozen_total = round(
-        sum(timings_best[frozen_keys.get(n, n)] for n in names), 3
-    )
-    # Host-drift normalization: best-of-session sentinel vs the pinned
-    # anchor. Host noise only INFLATES the sentinel, so min is the right
+    # Host-drift ratio: best-of-session sentinel vs the pinned anchor.
+    # Host noise only INFLATES the sentinel, so min is the right
     # statistic (same argument as best_of). ratio > 1 → this window is
-    # slower than the anchor window; dividing the frozen subtotal by it
-    # expresses the round in anchor-window seconds.
+    # slower than the anchor window.
     sentinel_s = round(min(sentinel_log), 3)
     host_ratio = round(sentinel_s / SENTINEL_REF_S, 4)
-    frozen_total_norm = round(frozen_total / host_ratio, 3)
     sentinel_io_s = round(min(io_sentinel_log), 3)
     io_ratio = round(sentinel_io_s / SENTINEL_IO_REF_S, 4)
     # sustained sentinel: min anchors against the pinned reference (noise
@@ -907,11 +584,9 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": sf,
-        "frozen_total": frozen_total,
         "sentinel_s": sentinel_s,
         "sentinel_ref_s": SENTINEL_REF_S,
         "host_ratio": host_ratio,
-        "frozen_total_norm": frozen_total_norm,
         "sentinel_passes": [round(s, 3) for s in sentinel_log],
         "sentinel_io_s": sentinel_io_s,
         "sentinel_io_ref_s": SENTINEL_IO_REF_S,
@@ -923,33 +598,9 @@ def main() -> None:
         "sentinel_sust_med_s": sentinel_sust_med_s,
         "sust_med_ratio": sust_med_ratio,
         "sentinel_sust_passes": [round(s, 3) for s in sust_sentinel_log],
-        # r9 verdict ask #6: frozen_total_norm divides a MIXED CPU/I-O
-        # workload by the CPU ratio alone, so it is DIRECTIONAL, not a
-        # precise host-independent number. The I/O-normalized companion
-        # below brackets the truth from the other side: when the two
-        # agree the window is uniform drift and either is trustworthy;
-        # when they diverge (|host_ratio − io_ratio| large) quote raw
-        # totals + both ratios and normalize nothing.
-        "frozen_total_norm_io": round(frozen_total / io_ratio, 3) if io_ratio > 0 else None,
-        "norm_basis": "frozen_total_norm is CPU-sentinel-based; "
-        "frozen_total_norm_io is IO-sentinel-based; both directional — "
-        "a mixed workload has no single drift ratio",
-        "arm_prices": arm_prices,
-        "construction_s": construction_s,
-        "construction_samples": construction_samples,
-        "construction_marginal_s": construction_marginal_s,
-        "construction_semantics": "construction_s[fam] = wall of the fn() "
-        "build with only that family's eager gates open, INCLUDING the "
-        "shared lazy prerequisites its scans execute; the family's "
-        "readable marginal price is construction_marginal_s[fam] = "
-        "family - __none__ (min of 2 interleaved samples; "
-        "construction_samples records how many landed)",
-        "arm_ceiling_flags": arm_ceiling_flags,
         # r12 verdict ask #7: the url-arm SaltDecision recorded by t01's
         # build (log-only; see plans/text_queries.LAST_URL_SALT_DECISION)
         "t01_url_salt_decision": _t01_salt_decision(),
-        "frozen_arms": {n: list(v[1]) for n, v in FROZEN_ARMS.items()},
-        "pinned_twins": {n: f"{m}.{f}" for n, (m, f) in PINNED_TWINS.items()},
         "queries_best": timings_best,
         "queries_cold": timings,
         "cold_total": round(sum(timings.values()), 3),
@@ -1001,24 +652,14 @@ def main() -> None:
                 "metric": "headline_queries_total",
                 "value": total,
                 "unit": "sec",
-                "frozen_total": frozen_total,
                 "sentinel_s": sentinel_s,
                 "host_ratio": host_ratio,
-                "frozen_total_norm": frozen_total_norm,
                 "sentinel_io_s": sentinel_io_s,
                 "io_ratio": io_ratio,
                 "sentinel_sust_s": sentinel_sust_s,
                 "sust_ratio": sust_ratio,
                 "sust_med_ratio": sust_med_ratio,
-                # self-description (r9 verdict ask #6): what the
-                # normalized number can and cannot claim
-                "norm_basis": "cpu-sentinel-only; directional — "
-                "overstates precision when io_ratio diverges from "
-                "host_ratio; raw totals + both ratios are the record",
                 "queries": {n: timings_best[n] for n in names},
-                "frozen_queries": {
-                    k: timings_best[k] for k in sorted(frozen_keys.values())
-                },
                 "sf": sf,
             },
             separators=(",", ":"),

@@ -102,40 +102,3 @@ def test_injectivity_guard_runs_on_gated_path(spark):
     finally:
         spark.conf.set("spark.wfc3.pipeline.assertPairIdUnique", "false")
 
-
-def test_materialize_defer_is_truly_lazy_and_row_identical(spark):
-    """r13: defer=True plans the checkpoint subtree NON-adaptively so
-    the lazy localCheckpoint pays planning only — under AQE the default
-    path MATERIALIZES every intermediate query stage at build (the r12
-    'planning tax' mechanism, SCALING.md §Round-13). Three contracts:
-    (a) no Spark job runs during the deferred call even with a shuffle
-    in the subtree; (b) rows are identical to the default path; (c) the
-    lineage is still truncated (LogicalRDD re-root), so the exponential
-    -plan guard iterative operators rely on is intact."""
-    from pyspark.sql import functions as F
-
-    from wfc3_cte_monitor_spark.checkpointing import materialize
-
-    def n_jobs() -> int:
-        tracker = spark.sparkContext.statusTracker()
-        return len(tracker.getJobIdsForGroup(None) or [])
-
-    agg = (
-        spark.range(10_000)
-        .groupBy((F.col("id") % 13).alias("k"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    )
-    j0 = n_jobs()
-    deferred = materialize(agg, defer=True)
-    assert n_jobs() == j0, "deferred materialize must not run jobs at build"
-    expect = sorted((r["k"], r["c"]) for r in agg.collect())
-    got = sorted((r["k"], r["c"]) for r in deferred.collect())
-    assert got == expect
-    # truncation: the deferred plan is re-rooted, no Range/Aggregate above it
-    logical = deferred._jdf.queryExecution().logical().toString()
-    assert "LogicalRDD" in logical and "Aggregate" not in logical
-    # eager=True wins over defer (the blocking-barrier contract)
-    eager = materialize(agg, eager=True, defer=True)
-    assert sorted((r["k"], r["c"]) for r in eager.collect()) == expect
-    # AQE conf restored after the call
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

@@ -59,85 +59,3 @@ def test_registry_respects_driver_query_cap():
         "most 50 — fold new capability into an existing query's arms"
     )
 
-
-def test_arms_requested_understands_complement_token():
-    """r11 ADVICE: eager-construction gates that intersected the raw
-    active_arms set treated bench.py's pseudo-arm complement token
-    ('__all_but__<pv>') as 'none of my arms' and would silently skip an
-    eager family, misattributing its cost to the pseudo-arm.
-    arms_requested is the one interpreter every gate now uses."""
-    from wfc3_cte_monitor_spark.plans.registry import arms_requested
-
-    D = {"dictD", "mergeD", "encodeD", "inferD", "decodeD"}
-    # no restriction -> build
-    assert arms_requested(None, D)
-    # plain sets: intersection semantics
-    assert arms_requested(frozenset({"doc", "dictD"}), D)
-    assert not arms_requested(frozenset({"doc", "url"}), D)
-    # complement token for a NON-member pseudo-arm -> the family IS in
-    # the complement -> build (the bug case)
-    assert arms_requested(frozenset({"__all_but__tri"}), D)
-    assert arms_requested(frozenset({"__all_but__tri"}), {"incr_cc"}) is True
-    # complement of one family member -> other members still requested
-    assert arms_requested(frozenset({"__all_but__dictD"}), D)
-    # complement of a single-arm family's own arm -> skip
-    assert not arms_requested(frozenset({"__all_but__incr_cc"}), {"incr_cc"})
-
-
-def test_arms_requested_rejects_mixed_filter_sets():
-    """r12 ADVICE: a mixed filter like {'doc', '__all_but__dictD'} used
-    to short-circuit to pure complement semantics, silently ignoring
-    the plain names. bench.py only ever emits a SINGLETON complement
-    set (bench.py:683), so anything mixed — or multiple complement
-    tokens — is a caller bug and must fail loudly."""
-    import pytest
-
-    from wfc3_cte_monitor_spark.plans.registry import arms_requested
-
-    with pytest.raises(ValueError, match="mixes plain arms"):
-        arms_requested(frozenset({"doc", "__all_but__dictD"}), {"dictD"})
-    with pytest.raises(ValueError, match="complement tokens"):
-        arms_requested(
-            frozenset({"__all_but__dictD", "__all_but__doc"}), {"dictD"}
-        )
-
-
-def test_bench_eager_families_consistent_with_gates():
-    """bench.py's construction_s instrument must agree with the
-    construction gates: each family's filter requests exactly its own
-    family's eager work, and the __none__ baseline closes EVERY eager
-    gate of that query (otherwise the baseline silently prices a
-    family and the decomposition double-counts). EAGER_FAMILIES is
-    scoped inside bench's run, so it is read statically."""
-    import ast
-    import inspect
-
-    import bench
-    from wfc3_cte_monitor_spark.plans.registry import arms_requested
-
-    fams = None
-    for node in ast.walk(ast.parse(inspect.getsource(bench))):
-        targets = (
-            node.targets
-            if isinstance(node, ast.Assign)
-            else [node.target] if isinstance(node, ast.AnnAssign) else []
-        )
-        if node.__class__.__name__ in ("Assign", "AnnAssign") and any(
-            getattr(t, "id", "") == "EAGER_FAMILIES" for t in targets
-        ):
-            expr = ast.Expression(body=node.value)
-            ast.fix_missing_locations(expr)
-            fams = eval(compile(expr, "<bench.EAGER_FAMILIES>", "eval"))
-            break
-    assert fams, "EAGER_FAMILIES not found in bench.py"
-
-    for q, entry in fams.items():
-        none_filter = entry.get("__none__")
-        assert none_filter, f"{q} needs a __none__ baseline"
-        for fam, arms in entry.items():
-            if fam == "__none__":
-                continue
-            assert arms_requested(arms, arms), (q, fam)
-            assert not arms_requested(none_filter, arms), (
-                f"{q} __none__ baseline does not close the {fam} gate"
-            )

@@ -321,48 +321,6 @@ def test_contam_eval_side_broadcasts(spark):
     assert m, "contam eval-shingle semi-join must be broadcast"
 
 
-def test_pinned_t01_twin_matches_live_exactly(spark):
-    # The bench's cross-version control (plans/frozen_t01_r13.py, the
-    # r14 flip of the r12 pin) must stay row-identical to live t01: the
-    # pin shares the stable substrate (functions/text, catalog,
-    # checkpointing) with the live plan on purpose, and a behavior
-    # change there silently corrupts the twin — this test converts that
-    # re-pin rule (pin docstring rule 2) from prose to CI, so the
-    # control is continuously verified rather than trusted from pin
-    # time (r10 verdict ask #2; ported to the r13 pin at the r14 flip
-    # per r13 verdict ask #4). The pin snapshots the FULL r13 arm set
-    # and r14 adds no arms (optimization round), so this is exact
-    # equality; if a future round adds arms to t01, restrict the live
-    # side to the pin's arm set (`which.isin(pin_arms)`) as the r13
-    # flip's test did.
-    from wfc3_cte_monitor_spark.plans.frozen_t01_r13 import t01_token_stats_r13
-
-    pin = sorted(map(tuple, t01_token_stats_r13(spark, SF).collect()))
-    live = sorted(
-        map(tuple, load_all()["t01_token_stats"].fn(spark, SF).collect())
-    )
-    assert live == pin
-
-
-def test_pinned_s01_twin_matches_live_exactly(spark):
-    # The SECOND bench control (plans/frozen_s01_r12.py, added at r13
-    # per r12 verdict ask #3 — an I/O-shaped pin: the r12 window's
-    # io_ratio 1.34 moved zero-code-change queries +26-48% with no
-    # per-query control outside t01). s01 has no arm column and the pin
-    # snapshots the full r12-close body, so this is exact row equality;
-    # if a future round changes s01, re-pin (never edit) and port this
-    # test the way the t01 pin tests were ported.
-    from wfc3_cte_monitor_spark.plans.frozen_s01_r12 import (
-        s01_header_derivations_r12,
-    )
-
-    pin = sorted(map(tuple, s01_header_derivations_r12(spark, SF).collect()))
-    live = sorted(
-        map(tuple, load_all()["s01_header_derivations"].fn(spark, SF).collect())
-    )
-    assert live == pin
-
-
 def test_t01_dict_bpe_plan_shape(spark):
     # The dictD family's scale posture inside t01: no cartesian
     # products anywhere in the 21-arm plan; every nested-loop join in

@@ -42,9 +42,7 @@ def reliable_enabled(spark) -> bool:
     return spark.conf.get(RELIABLE_CONF, "false").lower() == "true"
 
 
-def materialize(
-    df: DataFrame, eager: bool = False, force: bool = False, defer: bool = False
-) -> DataFrame:
+def materialize(df: DataFrame, eager: bool = False, force: bool = False) -> DataFrame:
     """Truncate lineage at ``df``: ``localCheckpoint`` by default,
     reliable ``checkpoint`` when ``spark.wfc3.checkpoint.reliable=true``.
 
@@ -67,50 +65,19 @@ def materialize(
     the loop ran (and was timed) regardless of what the final plan
     string shows.
 
-    ``defer=True`` (r13, per-callsite OPT-IN so the pinned bench twins'
-    shared substrate keeps its r12 behavior) plans the checkpoint
-    subtree NON-adaptively before truncating. Mechanism: with AQE on,
-    ``Dataset.localCheckpoint(eager=False)``'s ``queryExecution.toRdd``
-    returns an AdaptiveSparkPlanExec whose doExecute MATERIALIZES every
-    non-result query stage — each lazy truncation point with a shuffle
-    in its subtree runs serialized driver-side mini-jobs at plan-BUILD
-    time (the r12 "planning tax": ~245 ms × 30 sites ≈ 12 s of t01's
-    sf0.1 wall). A non-adaptive subtree plan pays only Catalyst
-    planning + codegen at build and defers stage execution to first
-    use, where the DAG scheduler runs the truncated subtrees inside
-    the consumer's own job (shared SHUFFLE stages dedup naturally —
-    one map stage per shuffle dependency regardless of consumer
-    count). Trade-offs, both deliberate: (a) the subtree itself loses
-    AQE (static 32-partition shuffles; explicit broadcast() hints keep
-    their joins) — right for the bounded iterative-trainer relations
-    this is used on, wrong for skew-prone corpus joins, so it stays
-    per-site; (b) NARROW shared chains under a deferred checkpoint can
-    be computed by racing sibling stages before the block cache fills —
-    keep widely-shared narrow roots (token-hash relations, per-round
-    corpus rewrites) on the default path or eager=True. The conf flip
-    is session-scoped and restored immediately; plan construction here
-    is single-threaded (bench, tests, driver gate all build serially).
+    With AQE on, a lazy truncation point whose subtree holds a shuffle
+    runs that subtree's query stages driver-side while the plan is
+    BUILT, not when it is first used (t01's "planning tax"). Relocating
+    that work to first use by planning the subtree non-adaptively was
+    measured and refuted twice (r13, r14); ``perfbench/run.py --trace 1``
+    reports those jobs under the ``phase=build`` tag.
     """
     spark = df.sparkSession
     if not force and spark.conf.get(DISABLE_CONF, "false").lower() == "true":
         return df  # introspection mode: keep the full plan visible
     if not reliable_enabled(spark):
-        if defer and not eager:
-            old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try:
-                return df.localCheckpoint(eager=False)
-            finally:
-                spark.conf.set("spark.sql.adaptive.enabled", old)
         return df.localCheckpoint(eager=eager)
     sc = spark.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():
         sc.setCheckpointDir(spark.conf.get(DIR_CONF, "/tmp/wfc3_reliable_ckpt"))
-    if defer and not eager:
-        old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return df.checkpoint(eager=False)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", old)
     return df.checkpoint(eager=eager)

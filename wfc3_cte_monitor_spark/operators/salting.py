@@ -129,6 +129,13 @@ def salted_rank(
     (|keys| × n_buckets rows → broadcast). All full-data exchanges hash
     on (key, bucket): the hot key spreads across n_buckets tasks.
 
+    The offsets relation is a predecessor-count SELF-JOIN of the
+    per-(key, bucket) counts, not a running sum: it produces
+    O(n_buckets²) rows per group (at most (n_buckets + 1)² with the NULL
+    bucket), and the whole counts relation is broadcast. A caller with
+    many groups or a large ``n_buckets`` pays that quadratic,
+    broadcast-sized work — size ``n_buckets`` with it in mind.
+
     Ties in ``order_col`` within one group are assigned ranks in an
     arbitrary (but bucket-stable) order — the same contract as plain
     ``row_number``. Equal values always land in the same bucket, so the

@@ -351,9 +351,6 @@ def d02_lsh_dedup_pipeline(spark, sf_dir):
         connected_components,
         incremental_components_with_reps,
     )
-    from .registry import active_arms
-
-    arms = active_arms("d02_lsh_dedup_pipeline")
 
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     # EXACT-COLLAPSE-FIRST (r13 sf10 ladder finding): byte-identical
@@ -541,16 +538,6 @@ def d02_lsh_dedup_pipeline(spark, sf_dir):
         "rep_id",
         F.when(F.col("doc_id") == F.col("rep_id"), 1).otherwise(0).cast("bigint").alias("keep"),
     )
-    from .registry import arms_requested
-
-    if not arms_requested(arms, {"incr_cc"}):
-        # frozen-arm bench pass: the incremental arm's construction is
-        # EAGER (driver-side convergence probes), so a post-hoc Catalyst
-        # union-branch prune can't skip its cost — skip building it.
-        # arms_requested (r11 ADVICE) so a future second pseudo-arm's
-        # __all_but__ complement run still builds this one.
-        return full_arm
-
     # 'incr_cc' — incremental cluster-store maintenance OF THE DECISION,
     # not just the labels. The edge split reuses the SAME materialized
     # bidirectional edge relation (no re-shingle): delta edges touch a

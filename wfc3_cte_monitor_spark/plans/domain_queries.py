@@ -766,20 +766,8 @@ def n03_model_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact ints on both engines. One extra window over the (tiny)
     # trend-grain relation — at any corpus size this is the same
     # per-series shuffle the backtest join already pays.
-    # 'anom' pseudo-arm (t02-'tri' pattern): the frozen-arm bench pass
-    # restricts to 'base' via registry.set_arm_filter; n03 has no
-    # `which` column, so the filter acts here at construction.
     from pyspark.sql import Window as W
 
-    from .registry import active_arms, arms_requested
-
-    arms = active_arms("n03_model_backtest")
-    if not arms_requested(arms, {"anom"}):
-        return backtest.select(
-            "*",
-            F.lit(None).cast("double").alias("zscore"),
-            F.lit(None).cast("bigint").alias("anomaly"),
-        )
     w = (
         W.partitionBy("targname", "aperture", "fluxbin")
         .orderBy("epoch")

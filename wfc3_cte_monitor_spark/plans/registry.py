@@ -40,64 +40,6 @@ class QuerySpec:
 
 QUERIES: dict[str, QuerySpec] = {}
 
-# Optional per-query arm restriction, set by bench.py's frozen-arm pass
-# (BENCH continuity: time round N's engine on round N-1's arm set).
-# Lazy tagged-union arms are pruned by a Catalyst filter on the literal
-# `which` column; arms with EAGER construction cost (iterative operators
-# that collect() driver-side while the plan is being BUILT, e.g. d02's
-# incremental-CC arm) additionally consult :func:`active_arms` and skip
-# construction entirely. None → no restriction (the normal gate path).
-_ARM_FILTER: dict[str, frozenset[str]] | None = None
-
-
-def set_arm_filter(filt: dict[str, frozenset[str]] | None) -> None:
-    global _ARM_FILTER
-    _ARM_FILTER = None if filt is None else {k: frozenset(v) for k, v in filt.items()}
-
-
-def active_arms(name: str) -> frozenset[str] | None:
-    """The arm set query ``name`` should build, or None for all arms."""
-    return None if _ARM_FILTER is None else _ARM_FILTER.get(name)
-
-
-_ALL_BUT = "__all_but__"
-
-
-def arms_requested(arms: frozenset[str] | None, names) -> bool:
-    """True iff an :func:`active_arms` set requests ANY of ``names`` —
-    the ONE interpreter for every eager-construction gate.
-
-    Understands bench.py's complement token ``__all_but__<arm>`` (the
-    pseudo-arm pricing run: "every arm EXCEPT <arm>"): such a set
-    requests ``names`` unless every one of them is excluded. r11
-    ADVICE: gates that intersected the raw set treated the complement
-    token as "none of my arms" and would silently skip an eager family
-    — misattributing its cost to the pseudo-arm — the moment the
-    host query gained a PSEUDO_ARMS entry."""
-    if arms is None:
-        return True
-    excluded = {a[len(_ALL_BUT):] for a in arms if a.startswith(_ALL_BUT)}
-    if excluded:
-        # complement sets must be PURE: a mixed filter like
-        # {'doc', '__all_but__dictD'} has no defined semantics (the
-        # plain names would be silently ignored — r12 ADVICE), and
-        # bench.py never emits one; fail loudly instead of widening.
-        plain = {a for a in arms if not a.startswith(_ALL_BUT)}
-        if plain:
-            raise ValueError(
-                f"arm filter mixes plain arms {sorted(plain)} with "
-                f"complement tokens {sorted(excluded)}; use one "
-                f"__all_but__<arm> token alone"
-            )
-        if len(excluded) != 1:
-            raise ValueError(
-                f"arm filter carries {len(excluded)} complement tokens "
-                f"{sorted(excluded)}; exactly one __all_but__<arm> token "
-                "is allowed (bench.py only ever emits a singleton)"
-            )
-        return any(n not in excluded for n in names)
-    return bool(set(names) & arms)
-
 
 def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):  # decorator
     def deco(fn: QueryFn) -> QueryFn:

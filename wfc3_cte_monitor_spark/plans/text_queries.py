@@ -257,9 +257,7 @@ LANG_TRIGRAMS: dict[str, list[str]] = {
 #                   (n_bpe_tokens≡per-doc lossless-match flag — both
 #                   engines must agree decode∘encode is the identity
 #                   on the translated corpus). EAGER construction
-#                   (dict-count + vocab-rounds scalars), so
-#                   arm-restricted runs without a D arm skip the
-#                   build (the d02 'incr_cc' pattern).
+#                   (dict-count + vocab-rounds scalars).
 CHUNK_TOKENS = 50
 PACK_TOKENS = 512
 N_SHARDS = 64
@@ -1120,26 +1118,24 @@ def t01_token_stats(spark, sf_dir):
     # the measured winner here; at 100 TB a mega-domain flips the
     # decision and the executable remedy is salted_rank). The decision
     # is one bounded 1-row aggregate over the |domains|-sized
-    # population relation, gated on the url arm so arm-filtered builds
-    # skip it; the fields land in BENCH_DETAIL via LAST_URL_SALT_DECISION.
-    from .registry import active_arms, arms_requested
-
+    # population relation; the fields land in BENCH_DETAIL via
+    # LAST_URL_SALT_DECISION.
+    #
     # cached per dataset: the decision is a property of the corpus, not
     # of the build — a production pipeline consults its monitoring
     # relation once per ingest, not once per query plan, so repeat
     # builds in one session (bench sweeps, multi-scale probes) reuse
     # each dataset's recorded decision.
-    if arms_requested(active_arms("t01_token_stats"), {"url"}):
-        if sf_dir not in _SALT_DECISIONS:
-            from ..operators.salting import should_salt
+    if sf_dir not in _SALT_DECISIONS:
+        from ..operators.salting import should_salt
 
-            _dec = should_salt(
-                urls_df.groupBy("reg_domain").count(),
-                cores=spark.sparkContext.defaultParallelism,
-            )
-            _SALT_DECISIONS[sf_dir] = dict(_dec._asdict(), _sf_dir=sf_dir)
-        LAST_URL_SALT_DECISION.clear()
-        LAST_URL_SALT_DECISION.update(_SALT_DECISIONS[sf_dir])
+        _dec = should_salt(
+            urls_df.groupBy("reg_domain").count(),
+            cores=spark.sparkContext.defaultParallelism,
+        )
+        _SALT_DECISIONS[sf_dir] = dict(_dec._asdict(), _sf_dir=sf_dir)
+    LAST_URL_SALT_DECISION.clear()
+    LAST_URL_SALT_DECISION.update(_SALT_DECISIONS[sf_dir])
     wdom = Window.partitionBy("reg_domain").orderBy("doc_id")
     url_arm = (
         urls_df.withColumn("rnk", F.row_number().over(wdom))
@@ -1462,8 +1458,7 @@ def t01_token_stats(spark, sf_dir):
     # cross-check's one duplicate corpus pass (deliberately accepted
     # r8-r12; the operator grew the precomputed-counts parameter when
     # the duplicate became the census's top remaining line). Verified
-    # row-identical vs the oracle at both gate scales; the r12 pin
-    # keeps the recount, so BENCH_r13's live − pinned prices the reuse.
+    # row-identical vs the oracle at both gate scales.
     from ..operators.bpe_batch import batched_bpe_train
 
     bb_corpus, bb_vocab = batched_bpe_train(
@@ -1597,20 +1592,10 @@ def t01_token_stats(spark, sf_dir):
     # dictD family (r11): the dictionary-form BPE lifecycle —
     # train/encode/infer/decode arms (plans/bpe_dict_queries.py). Its
     # CONSTRUCTION is eager (the dictionary-count scalar + the vocab
-    # max(round) scan run driver-side while the plan is built), so an
-    # arm-restricted run that doesn't ask for any D arm skips the
-    # build entirely — the d02 'incr_cc' pattern.
-    from .registry import active_arms, arms_requested
+    # max(round) scan run driver-side while the plan is built).
+    from .bpe_dict_queries import dict_bpe_arms
 
-    _D_ARMS = {"dictD", "mergeD", "encodeD", "inferD", "decodeD"}
-    # arms_requested (not a raw intersection) so bench's pseudo-arm
-    # complement token __all_but__<pv> still builds the D family unless
-    # the D arms themselves are what's excluded (r11 ADVICE).
-    if arms_requested(active_arms("t01_token_stats"), _D_ARMS):
-        from .bpe_dict_queries import dict_bpe_arms
-
-        out = out.unionAll(dict_bpe_arms(thd))
-    return out
+    return out.unionAll(dict_bpe_arms(thd))
 
 
 # T2 — language-ID heuristics, both forms: stopword-profile hit counts
@@ -1886,9 +1871,6 @@ def t02_text_profile(spark, sf_dir):
     because it matches whole tokens."""
     from ..functions.dedup import simhash16
     from ..functions.text import winnow_fingerprints
-    from .registry import active_arms
-
-    arms = active_arms("t02_text_profile")
 
     # the documents parquet is a single file → spread the CPU-heavy text
     # expressions across the executor threads (the shuffle is a few MB).
@@ -1975,47 +1957,38 @@ def t02_text_profile(spark, sf_dir):
     # shingles() docstring documents (measured catastrophically here:
     # 234 s at sf0.1 unbound vs sub-second bound; CollapseProject keeps
     # multi-referenced aliases un-inlined, which is what makes the
-    # binding stick). Skipped under the frozen-arm pass ('tri' arm).
-    from .registry import arms_requested
-
-    if arms_requested(arms, {"tri"}):
-        langs = sorted(LANG_TRIGRAMS)
-        docs_tri = (
-            docs.withColumn(
-                "_nt", F.concat(F.lit(" "), norm_text("text"), F.lit(" "))
-            )
-            .withColumn(
-                "_tri",
-                F.expr(
-                    "transform(sequence(1, greatest(length(_nt) - 2, 1)),"
-                    " i -> substring(_nt, i, 3))"
-                ),
-            )
-            .withColumns({
-                f"_th_{lang}": F.size(
-                    F.expr(
-                        "filter(_tri, x -> x IN ("
-                        + ", ".join(f"'{t}'" for t in LANG_TRIGRAMS[lang])
-                        + "))"
-                    )
-                ).cast("bigint")
-                for lang in langs
-            })
+    # binding stick).
+    langs = sorted(LANG_TRIGRAMS)
+    docs_tri = (
+        docs.withColumn(
+            "_nt", F.concat(F.lit(" "), norm_text("text"), F.lit(" "))
         )
-        mx = F.greatest(*[F.col(f"_th_{lang}") for lang in langs])
-        pick = F.lit("und")
-        for lang in reversed(langs):  # earliest (smallest) lang wins ties
-            pick = F.when(F.col(f"_th_{lang}") == mx, F.lit(lang)).otherwise(pick)
-        tri_cols = [
-            F.when(mx <= 0, F.lit("und")).otherwise(pick).alias("tri_lang"),
-            F.when(mx <= 0, F.lit(0)).otherwise(mx).cast("bigint").alias("tri_hits"),
-        ]
-    else:
-        docs_tri = docs
-        tri_cols = [
-            F.lit("und").alias("tri_lang"),
-            F.lit(0).cast("bigint").alias("tri_hits"),
-        ]
+        .withColumn(
+            "_tri",
+            F.expr(
+                "transform(sequence(1, greatest(length(_nt) - 2, 1)),"
+                " i -> substring(_nt, i, 3))"
+            ),
+        )
+        .withColumns({
+            f"_th_{lang}": F.size(
+                F.expr(
+                    "filter(_tri, x -> x IN ("
+                    + ", ".join(f"'{t}'" for t in LANG_TRIGRAMS[lang])
+                    + "))"
+                )
+            ).cast("bigint")
+            for lang in langs
+        })
+    )
+    mx = F.greatest(*[F.col(f"_th_{lang}") for lang in langs])
+    pick = F.lit("und")
+    for lang in reversed(langs):  # earliest (smallest) lang wins ties
+        pick = F.when(F.col(f"_th_{lang}") == mx, F.lit(lang)).otherwise(pick)
+    tri_cols = [
+        F.when(mx <= 0, F.lit("und")).otherwise(pick).alias("tri_lang"),
+        F.when(mx <= 0, F.lit(0)).otherwise(mx).cast("bigint").alias("tri_hits"),
+    ]
     profile = (
         docs_tri.select(
             "doc_id",
