@@ -6,7 +6,10 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
 Each query is materialized with a noop write (full plan execution, no
 driver-side collect), so the numbers measure engine throughput, not
-result serialization.
+result serialization. The schedule is fixed — three interleaved passes
+per query, best-of per query — so the pass count never depends on host
+speed. Per-stage attribution and two-revision comparisons are
+perfbench's job (``perfbench/run.py --trace 1``).
 """
 
 from __future__ import annotations
@@ -54,57 +57,9 @@ HEADLINE = [
     "ev01_event_windows",
 ]
 
-# HOST-DRIFT SENTINEL (r7 verdict ask #2): a PINNED workload — fixed
-# literal data, JVM-only (codegen range scan + hash agg, no I/O, no
-# Python), never to be touched across rounds — timed in the same
-# interleave as the query passes. Its best-of-session against the pinned
-# reference below turns "is this host window slower than last round's"
-# from a forensic multi-run session into one recorded ratio:
-#   host_ratio = sentinel_s / SENTINEL_REF_S
-# SENTINEL_REF_S was pinned from quiet-window r8 measurements on the
-# round-8 host; it is an ANCHOR, not a prediction — only the ratio's
-# round-over-round movement carries meaning. Do not re-pin it unless the
-# sentinel workload itself changes (then re-pin and note it in
-# SCALING.md).
-SENTINEL_REF_S = 0.97
-
-# I/O-FLAVORED SENTINEL (r8 verdict ask #3): the CPU sentinel is blind
-# to contention that squeezes only the I/O path (page cache pressure,
-# disk scheduler bursts) — its documented blind spot made the r8
-# normalization contestable for I/O-mixed queries. This second pinned
-# workload is a fixed parquet scan + filter + hash agg over a
-# DETERMINISTIC file (generated from spark.range once, content
-# identical whenever regenerated, never edited). Both ratios are
-# emitted; the I/O ratio is the second witness that says whether an
-# I/O-heavy query's drift tracks the host's I/O path.
-# SENTINEL_IO_REF_S pinned from quiet-window r9 measurements on the
-# round-9 host — an ANCHOR, not a prediction (same rule as above).
-IO_SENTINEL_PATH = "/tmp/wfc3_bench_io_sentinel_v1"
-SENTINEL_IO_REF_S = 0.62
-
-# SUSTAINED-LOAD SENTINEL (r10 verdict ask #3): both short sentinels
-# sample ~1 s of host state, and two consecutive rounds hit drift they
-# could not see — r9: inflated sentinels + fast queries; r10: quiet
-# sentinels + zero-code-change queries reading +8-16% (twin swinging
-# 12.39-13.80 s). Contention that only materializes under SUSTAINED
-# load (cgroup CPU-quota periods, turbo/thermal limits, page-cache
-# churn from a co-tenant) is invisible to a 1 s probe but fully visible
-# to a 5-13 s query. This third pinned workload integrates ~9 s of
-# mixed CPU + shuffle + join work (fixed-seed generated relations: a
-# 600M-row modular-arithmetic scan into a 1M-group hash agg, joined
-# against a second 150M-row aggregate, one final reduction — JVM-only,
-# deterministic, never to be touched). One sample per interleaved
-# sweep. What each sentinel CAN attribute (recorded in SCALING.md):
-# CPU/I-O ratios move → instantaneous host pressure on that path;
-# sustained ratio moves with quiet short sentinels → sustained-load
-# throttling (the r10 signature). Separating engine code cost from host
-# drift is a two-revision question: run perfbench on both commits. Within a
-# session, min is the anchor comparator (noise only inflates) and the
-# min↔median spread is the sustained-pressure signal — both emitted.
-# SENTINEL_SUST_REF_S pinned from quiet-window r11 measurements on the
-# round-11 host (6 warm passes: 12.85 8.74 8.50 7.90 8.27 8.31 → min
-# 7.90, median 8.5) — an ANCHOR, not a prediction (same rule as above).
-SENTINEL_SUST_REF_S = 7.9
+# Scheduled passes: cold (plan compilation + whole-stage codegen) plus
+# two steady-state passes.
+N_PASSES = 3
 
 
 def _t01_salt_decision() -> dict | None:
@@ -121,7 +76,6 @@ def _t01_salt_decision() -> dict | None:
 
 
 def main() -> None:
-    bench_t0 = time.perf_counter()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
@@ -146,434 +100,32 @@ def main() -> None:
         .write.mode("overwrite").format("noop").save()
     )
 
-    # Per-pass GC attribution: local mode is ONE JVM, so the GC-bean
-    # collection-time delta across a pass is exactly the stop-the-world
-    # time the query's tasks shared. A pass whose wall sits 10s above its
-    # best with ~10s of GC delta is self-explaining (the n03-class
-    # spread r5 could not attribute); a slow pass with ~0 GC points at
-    # scheduling/contention instead.
-    _mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-    _gc_beans = _mf.getGarbageCollectorMXBeans()
-    # JVM pid via ProcessHandle (the MXBean's getProcessCpuTime lives on
-    # the com.sun interface, which py4j cannot reach through JPMS);
-    # /proc/<pid>/stat utime+stime gives the same process-CPU clock.
-    _jvm_pid = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
-    _tick = os.sysconf("SC_CLK_TCK")
-
-    def _gc_ms() -> int:
-        return sum(int(b.getCollectionTime()) for b in _gc_beans)
-
-    def _cpu_ms() -> int:
-        # JVM process CPU (driver + all local-mode executor threads).
-        # Per-pass delta separates the two slow-pass causes the wall
-        # clock can't: cpu ≈ typical but wall inflated → the JVM was
-        # STARVED (external contention); cpu inflated with wall → the
-        # pass genuinely did more work (plan/JIT/GC-adjacent).
-        with open(f"/proc/{_jvm_pid}/stat") as fh:
-            parts = fh.read().rsplit(") ", 1)[1].split()
-        return (int(parts[11]) + int(parts[12])) * 1000 // _tick
-
-    gc_log: dict[str, list[int]] = {}
-    cpu_log: dict[str, list[int]] = {}
-
-    # --- per-pass STAGE metrics from the AppStatusStore (r6 ask #3) ----------
-    # Task-time is the wall clock's missing witness: a slow pass whose
-    # summed executorRunTime matches the fast pass's did the SAME work —
-    # the extra wall is host interference (starved threads), not plan
-    # cost. Stages completed during a pass are identified by stage id
-    # above the last high-water mark, so status-store eviction of old
-    # stages can't corrupt the deltas.
-    _store = spark.sparkContext._jsc.sc().statusStore()
-    _jvm2 = spark.sparkContext._jvm
-    _qarr = spark.sparkContext._gateway.new_array(_jvm2.double, 0)
-    _hiwater = [-1]
-    _bus = spark.sparkContext._jsc.sc().listenerBus()
-
-    def _new_stage_totals() -> dict[str, int]:
-        # The AppStatusStore is fed by the ASYNC listener bus: a stage
-        # whose completion event hasn't been processed yet would be
-        # excluded from this pass's run_ms AND permanently skipped via
-        # the raised high-water mark — undercounting a pass's task time
-        # and mislabeling a genuinely-slow pass as 'interference'. Drain
-        # the bus first so stage deltas are complete.
-        try:
-            _bus.waitUntilEmpty(10_000)
-        except Exception:
-            pass  # timed out mid-burst: proceed with what's visible
-        stages = _store.stageList(
-            _jvm2.java.util.ArrayList(), False, False, _qarr,
-            _jvm2.java.util.ArrayList(),
-        )
-        out = {"stages": 0, "tasks": 0, "run_ms": 0, "cpu_ms": 0,
-               "gc_ms": 0, "deser_ms": 0}
-        max_id = _hiwater[0]
-        it = stages.iterator()
-        while it.hasNext():
-            st = it.next()
-            sid = st.stageId()
-            if sid <= _hiwater[0]:
-                continue
-            max_id = max(max_id, sid)
-            if st.status().toString() != "COMPLETE":
-                continue
-            out["stages"] += 1
-            out["tasks"] += st.numCompleteTasks()
-            out["run_ms"] += st.executorRunTime()
-            out["cpu_ms"] += int(st.executorCpuTime()) // 1_000_000
-            out["gc_ms"] += st.jvmGcTime()
-            out["deser_ms"] += st.executorDeserializeTime()
-        _hiwater[0] = max_id
-        return out
-
-    stage_log: dict[str, list[dict[str, int]]] = {}
-
     def run_once(name: str) -> float:
-        _new_stage_totals()  # flush probe/warmup stages past the high-water
-        g0, c0 = _gc_ms(), _cpu_ms()
         t0 = time.perf_counter()
         specs[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         elapsed = time.perf_counter() - t0
-        stage_log.setdefault(name, []).append(_new_stage_totals())
-        gc_log.setdefault(name, []).append(_gc_ms() - g0)
-        cpu_log.setdefault(name, []).append(_cpu_ms() - c0)
         # release dropped shuffle files/broadcasts: the ContextCleaner only
         # frees them after a driver GC, and letting them pile up across ~75
         # executions skews late queries (observed 4s -> 27s on the same plan)
         spark.sparkContext._jvm.System.gc()
         return elapsed
 
-    # --- calibration probe --------------------------------------------------
-    # A fixed CPU-bound job timed BETWEEN passes. Host-noise bursts here
-    # last tens of seconds, so a burst that inflates a query pass also
-    # inflates the probes bracketing it; a pass whose surrounding probes
-    # drifted past the gate is marked SUSPECT and re-run. This is the
-    # r4 lesson: dispersion/stall triggers can't save a query when EVERY
-    # scheduled pass lands in a burst — only an external time reference
-    # can (official r4 best-of sat 2-3x above quiet-window reruns).
-    # This leg is deliberately JVM-only (codegen range-sum, no I/O, no
-    # Python) so its reference floor is tight; the Python-worker domain
-    # gets its OWN separately-gated leg below (r5's attempt to share one
-    # gate failed because the Arrow roundtrip jitters ~2.4x even quiet).
-    probe_df = spark.range(0, 200_000_000, 1, par).selectExpr(
-        "sum(id * 3 + 1) AS s"
-    )
-    probe_log: list[float] = []
-
-    # Second, separately-gated probe for the PYTHON-WORKER domain: a tiny
-    # fixed mapInPandas job (fork-warmed pool, numpy already imported) that
-    # pays one Arrow roundtrip per core plus a bounded numpy kernel. The
-    # JVM probe is blind to contention that squeezes only the Arrow/pandas
-    # workers (r5: n03 spanned 4.2-18.3s with every pass "clean"); this
-    # leg sees it. It is gated on ITS OWN session-min with a WIDER gate —
-    # the roundtrip itself jitters ~2.4x between quiet windows, which is
-    # why the r5 attempt to fold a Python leg into the shared JVM gate
-    # poisoned the reference and was rejected — and it only flags queries
-    # whose physical plan actually contains Python eval nodes.
-    def _py_work(it):
-        import numpy as np  # already imported in the warmed workers
-
-        for pdf in it:
-            a = np.arange(200_000, dtype="float64")
-            yield pdf.assign(id=pdf["id"] + int(np.sin(a).sum() * 0))
-
-    pyprobe_df = spark.range(par).repartition(par).mapInPandas(_py_work, "id long")
-    pyprobe_log: list[float] = []
-
-    # The pinned host-drift sentinel (see SENTINEL_REF_S above): big
-    # enough (~1-1.5s quiet) that scheduler jitter is a small fraction,
-    # JVM-only so the Python worker pool can't color it, one hash-agg
-    # exchange so it exercises the shuffle machinery queries live on.
-    sentinel_df = (
-        spark.range(0, 1_000_000_000, 1, par)
-        .selectExpr("id % 4096 AS k", "id * 3 + 1 AS v")
-        .groupBy("k")
-        .sum("v")
-    )
-    sentinel_log: list[float] = []
-
-    def sentinel() -> float:
-        t0 = time.perf_counter()
-        sentinel_df.write.mode("overwrite").format("noop").save()
-        s = time.perf_counter() - t0
-        sentinel_log.append(s)
-        return s
-
-    # The pinned I/O sentinel (see SENTINEL_IO_REF_S above). The file is
-    # deterministic spark.range output — (re)generated only when absent,
-    # byte-stable content, fixed 32-way layout; the job is a full scan
-    # (two bigints + a short string column), a 1-in-11 filter and one
-    # hash agg: scan-dominated by construction.
-    if not os.path.exists(os.path.join(IO_SENTINEL_PATH, "_SUCCESS")):
-        (
-            spark.range(0, 40_000_000, 1, 32)
-            .selectExpr(
-                "id % 9973 AS k", "id * 7 + 3 AS v",
-                "concat('r-', id % 131071) AS s",
-            )
-            .write.mode("overwrite").parquet(IO_SENTINEL_PATH)
-        )
-    io_sentinel_df = (
-        spark.read.parquet(IO_SENTINEL_PATH)
-        .where("v % 11 = 0")
-        .selectExpr("k", "v", "length(s) AS ls")
-        .groupBy("k")
-        .sum("v", "ls")
-    )
-    io_sentinel_log: list[float] = []
-
-    def io_sentinel() -> float:
-        t0 = time.perf_counter()
-        io_sentinel_df.write.mode("overwrite").format("noop").save()
-        s = time.perf_counter() - t0
-        io_sentinel_log.append(s)
-        return s
-
-    # The pinned sustained-load sentinel (see SENTINEL_SUST_REF_S
-    # above): ~9 s quiet of mixed CPU + two hash-agg shuffles + one
-    # 1M×1M join + final reduction, all from deterministic range
-    # generators — long enough to feel sustained-load throttling the
-    # 1 s probes cannot.
-    from pyspark.sql import functions as _SF
-
-    sust_sentinel_df = (
-        spark.range(0, 600_000_000, 1, par)
-        .selectExpr("id % 1048576 AS k", "(id * 31 + 7) % 1000000007 AS v")
-        .groupBy("k")
-        .agg(_SF.sum("v").alias("sv"), _SF.count(_SF.lit(1)).alias("c"))
-        .join(
-            spark.range(0, 150_000_000, 1, par)
-            .selectExpr("id % 1048576 AS k", "(id * 13 + 5) % 999983 AS w")
-            .groupBy("k")
-            .agg(_SF.sum("w").alias("sw")),
-            "k",
-        )
-        .selectExpr("sum(sv + sw * c) AS s")
-    )
-    sust_sentinel_log: list[float] = []
-
-    def sust_sentinel() -> float:
-        t0 = time.perf_counter()
-        sust_sentinel_df.write.mode("overwrite").format("noop").save()
-        s = time.perf_counter() - t0
-        sust_sentinel_log.append(s)
-        return s
-
-    def probe() -> tuple[float, float]:
-        t0 = time.perf_counter()
-        probe_df.write.mode("overwrite").format("noop").save()
-        jvm = time.perf_counter() - t0
-        probe_log.append(jvm)
-        t0 = time.perf_counter()
-        pyprobe_df.write.mode("overwrite").format("noop").save()
-        py = time.perf_counter() - t0
-        pyprobe_log.append(py)
-        return jvm, py
-
-    # A pass is SUSPECT when either bracketing probe exceeds
-    # max(1.5x session-min, session-min + 0.5s): the ratio term is the
-    # r4 drift gate, the absolute term keeps the gate meaningful — the
-    # probe itself jitters ~2x around a ~0.1s floor (JIT/GC/scheduling),
-    # which is noise no multi-second query can feel, while a real host
-    # burst inflates the probe by SECONDS. Without the absolute floor the
-    # first calibrated run marked 21/26 queries all-suspect and burned
-    # the whole redo budget on phantom drift; with 0.5s slack a follow-up
-    # run flagged nothing. 0.3s splits the difference: >3x the observed
-    # quiet-window probe jitter, far below any burst that matters.
-    PROBE_DRIFT = 1.5
-    PROBE_SLACK_S = 0.3
-    # Python-leg gate: wider than the JVM gate because the Arrow worker
-    # roundtrip itself jitters ~2.4x between quiet windows (measured r5)
-    # — 3x + 1.0s only trips on multi-second worker-pool stalls, which is
-    # the n03/e01/m01 failure mode this leg exists to surface.
-    PYPROBE_DRIFT = 3.0
-    PYPROBE_SLACK_S = 1.0
-
-    # Does this query's physical plan run anything in Python workers?
-    # Decided from the plan itself (not a hand-kept list) so the py-leg
-    # gate tracks the code: only those queries can be py-flagged.
-    _PY_NODES = ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas",
-                 "BatchEvalPython", "PythonUDF", "FlatMapGroupsInPandasWithState")
-    uses_python: dict[str, bool] = {}
-
-    def _uses_python(name: str) -> bool:
-        if name not in uses_python:
-            # build the probe plan with checkpoint truncation DISABLED:
-            # the lazy-checkpoint sites re-root their subtree at a
-            # LogicalRDD, which would hide e.g. e01's pandas-UDF stages
-            # from the inspector (observed: e01 read as Python-free)
-            from wfc3_cte_monitor_spark.checkpointing import DISABLE_CONF
-
-            spark.conf.set(DISABLE_CONF, "true")
-            try:
-                plan = (
-                    specs[name].fn(spark, sf_dir)
-                    ._jdf.queryExecution().executedPlan().toString()
-                )
-            finally:
-                spark.conf.set(DISABLE_CONF, "false")
-            uses_python[name] = any(m in plan for m in _PY_NODES)
-        return uses_python[name]
-
-    # per query: list of (elapsed, jvm_before, jvm_after, py_before, py_after)
-    all_passes: dict[str, list[tuple[float, float, float, float, float]]] = {n: [] for n in names}
-
-    # Three passes per query, INTERLEAVED across queries (pass 1 of every
-    # query, then pass 2, then pass 3): consecutive per-query passes let
-    # one burst poison all of a single query's samples (r3: cs03 spread
-    # 8.3-16.2s); interleaving decorrelates the burst from any one query.
-    # Pass 1 ("cold") pays plan compilation + whole-stage codegen; passes
-    # 2-3 are steady-state. Consecutive queries share the bracketing
-    # probe, so calibration costs one probe pair per pass, not two.
-    # Scheduled pass count: 3 is the measurement protocol (cold + two
-    # steady-state, interleaved); SPARK_GRAFT_BENCH_PASSES=1 is a smoke
-    # knob for validating the harness itself without the full budget.
-    n_passes = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3")))
-
-    # warm the sentinel plans once, untimed: the first executions pay
-    # whole-stage codegen (~3.5s vs ~1s steady) which would otherwise
-    # make pass-1's samples pure compile noise (the I/O sentinel's
-    # warm run also primes the page cache — deliberate: the steady-state
-    # cached-scan floor is the pinned reference, not cold disk)
-    sentinel_df.write.mode("overwrite").format("noop").save()
-    io_sentinel_df.write.mode("overwrite").format("noop").save()
-    sust_sentinel_df.write.mode("overwrite").format("noop").save()
-
-    probe()  # settle + first sample
-    last_probe = probe()
-    for _ in range(n_passes):
-        sentinel()  # one pinned-workload sample per interleaved sweep
-        io_sentinel()
-        sust_sentinel()
+    # INTERLEAVED across queries (pass 1 of every query, then pass 2, then
+    # pass 3): consecutive per-query passes let one burst poison all of a
+    # single query's samples (r3: cs03 spread 8.3-16.2s); interleaving
+    # decorrelates the burst from any one query.
+    passes: dict[str, list[float]] = {n: [] for n in names}
+    for _ in range(N_PASSES):
         for name in names:
-            elapsed = run_once(name)
-            p_after = probe()
-            all_passes[name].append((elapsed, *last_probe, *p_after))
-            last_probe = p_after
+            passes[name].append(run_once(name))
 
-    # FROZEN session minima (r5 ADVICE): the redo decisions and the final
-    # clean flags must use the SAME reference, or a probe minimum found
-    # after a query's redos can retroactively mark passes the redo phase
-    # accepted as suspect — an inconsistent confidence record. Freeze
-    # after the scheduled passes (28+ samples: plenty to find the quiet
-    # floor); later probes still log for the spread record but never move
-    # the gate.
-    probe_min = min(probe_log)
-    pyprobe_min = min(pyprobe_log)
-
-    def jvm_clean(p: tuple[float, ...]) -> bool:
-        return max(p[1], p[2]) <= max(PROBE_DRIFT * probe_min, probe_min + PROBE_SLACK_S)
-
-    def py_clean(p: tuple[float, ...]) -> bool:
-        return max(p[3], p[4]) <= max(
-            PYPROBE_DRIFT * pyprobe_min, pyprobe_min + PYPROBE_SLACK_S
-        )
-
-    def clean(name: str, p: tuple[float, ...]) -> bool:
-        return jvm_clean(p) and (py_clean(p) if _uses_python(name) else True)
-
-    # Redo phase: any query with no CLEAN warm pass gets re-run (fresh
-    # probe bracket each time) until one lands in a quiet window.
-    # Globally bounded so a fully-loaded host can't run away.
-    redo_budget = 20 if n_passes >= 2 else 0
-    n_redone = 0
-    for name in names:
-        tries = 0
-        while tries < 3 and redo_budget > 0:
-            if any(clean(name, p) for p in all_passes[name][1:]):
-                break
-            elapsed = run_once(name)
-            p_after = probe()
-            all_passes[name].append((elapsed, *last_probe, *p_after))
-            last_probe = p_after
-            tries += 1
-            redo_budget -= 1
-            n_redone += 1
-
-    # One extra interleaved pass over every query when time permits — a
-    # sample in yet another time window, budgeted against wall-clock so
-    # the driver's timeout is never approached.
-    EXTRA_PASS_BUDGET_S = 420.0
-    if n_passes >= 3 and time.perf_counter() - bench_t0 < EXTRA_PASS_BUDGET_S:
-        sentinel()
-        io_sentinel()
-        sust_sentinel()
-        for name in names:
-            elapsed = run_once(name)
-            p_after = probe()
-            all_passes[name].append((elapsed, *last_probe, *p_after))
-            last_probe = p_after
-
-    def best_of(name: str) -> float:
-        """Per-query headline: best over ALL passes. Host noise can only
-        INFLATE a wall-clock sample, never deflate it, so the fastest
-        pass is always valid evidence of engine cost — even when its
-        probe bracket was flagged (a burst near a pass proves nothing
-        about the pass's own quiet portions). The clean flags therefore
-        drive the REDO decision (guarantee at least one quiet sample
-        exists) and the sidecar's confidence record, not sample
-        selection: preferring a slower clean pass over a faster suspect
-        one was observed to over-report a query by 2x in one window."""
-        return min(p[0] for p in all_passes[name])
-
-    timings = {n: round(p[0][0], 3) for n, p in all_passes.items()}
-    timings_warm = {
-        n: round(min(t[0] for t in (p[1:] or p)), 3) for n, p in all_passes.items()
-    }
-    timings_best = {n: round(best_of(n), 3) for n in names}
-    passes = {n: [round(t[0], 3) for t in p] for n, p in all_passes.items()}
-    clean_flags = {
-        n: [clean(n, p) for p in ps] for n, ps in all_passes.items()
-    }
-    py_clean_flags = {
-        n: [py_clean(p) for p in ps] for n, ps in all_passes.items() if _uses_python(n)
-    }
-    all_suspect = sorted(n for n, flags in clean_flags.items() if not any(flags))
-
-    # Slow-pass attribution KEYED ON TASK TIME, not wall (r6 ask #3): for
-    # every pass with wall > 1.5x the query's best, compare its summed
-    # executorRunTime to the best pass's. Within 1.25x -> the work was
-    # identical, the wall gap is host INTERFERENCE; above -> the pass
-    # genuinely did more task work (GC pressure, spill, recompilation —
-    # see its gc_ms). This is the n03-outlier decomposition the wall
-    # clock alone could never make.
-    slow_pass_attribution: dict[str, list[dict]] = {}
-    for n, ps in all_passes.items():
-        walls = [p[0] for p in ps]
-        runs = [m["run_ms"] for m in stage_log.get(n, [])]
-        if len(runs) != len(walls) or not runs:
-            continue
-        i_best = walls.index(min(walls))
-        for i, (wall, run) in enumerate(zip(walls, runs)):
-            if wall > 1.5 * walls[i_best] and wall - walls[i_best] > 0.5:
-                ref = max(runs[i_best], 1)
-                slow_pass_attribution.setdefault(n, []).append({
-                    "pass": i,
-                    "wall": round(wall, 3),
-                    "wall_best": round(walls[i_best], 3),
-                    "run_ms": run,
-                    "run_ms_best": runs[i_best],
-                    "gc_ms": stage_log[n][i]["gc_ms"],
-                    "cause": "interference" if run <= 1.25 * ref else "extra_work",
-                })
-
-    total = round(sum(timings_best[n] for n in names), 3)
-    # Host-drift ratio: best-of-session sentinel vs the pinned anchor.
-    # Host noise only INFLATES the sentinel, so min is the right
-    # statistic (same argument as best_of). ratio > 1 → this window is
-    # slower than the anchor window.
-    sentinel_s = round(min(sentinel_log), 3)
-    host_ratio = round(sentinel_s / SENTINEL_REF_S, 4)
-    sentinel_io_s = round(min(io_sentinel_log), 3)
-    io_ratio = round(sentinel_io_s / SENTINEL_IO_REF_S, 4)
-    # sustained sentinel: min anchors against the pinned reference (noise
-    # only inflates); the min↔median spread within the session is the
-    # sustained-pressure signal the short sentinels cannot carry
-    sentinel_sust_s = round(min(sust_sentinel_log), 3)
-    sust_ratio = round(sentinel_sust_s / SENTINEL_SUST_REF_S, 4)
-    sentinel_sust_med_s = round(
-        sorted(sust_sentinel_log)[len(sust_sentinel_log) // 2], 3
-    )
-    sust_med_ratio = round(sentinel_sust_med_s / SENTINEL_SUST_REF_S, 4)
+    # Per-query headline: best over all passes. Host noise can only
+    # INFLATE a wall-clock sample, never deflate it, so the fastest pass
+    # is always valid evidence of engine cost.
+    best = {n: round(min(p), 3) for n, p in passes.items()}
+    cold = {n: round(p[0], 3) for n, p in passes.items()}
+    warm = {n: round(min(p[1:] or p), 3) for n, p in passes.items()}
+    total = round(sum(best.values()), 3)
 
     # Full per-pass detail (cold/warm split + min/median/max spread, so a
     # noisy-neighbor stall is distinguishable from a plan regression) goes
@@ -584,58 +136,20 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": sf,
-        "sentinel_s": sentinel_s,
-        "sentinel_ref_s": SENTINEL_REF_S,
-        "host_ratio": host_ratio,
-        "sentinel_passes": [round(s, 3) for s in sentinel_log],
-        "sentinel_io_s": sentinel_io_s,
-        "sentinel_io_ref_s": SENTINEL_IO_REF_S,
-        "io_ratio": io_ratio,
-        "sentinel_io_passes": [round(s, 3) for s in io_sentinel_log],
-        "sentinel_sust_s": sentinel_sust_s,
-        "sentinel_sust_ref_s": SENTINEL_SUST_REF_S,
-        "sust_ratio": sust_ratio,
-        "sentinel_sust_med_s": sentinel_sust_med_s,
-        "sust_med_ratio": sust_med_ratio,
-        "sentinel_sust_passes": [round(s, 3) for s in sust_sentinel_log],
         # r12 verdict ask #7: the url-arm SaltDecision recorded by t01's
         # build (log-only; see plans/text_queries.LAST_URL_SALT_DECISION)
         "t01_url_salt_decision": _t01_salt_decision(),
-        "queries_best": timings_best,
-        "queries_cold": timings,
-        "cold_total": round(sum(timings.values()), 3),
-        "queries_warm": timings_warm,
-        "warm_total": round(sum(timings_warm.values()), 3),
-        "passes": passes,
-        "gc_ms": gc_log,
-        "cpu_ms": cpu_log,
-        "stage_metrics": stage_log,
-        "slow_pass_attribution": slow_pass_attribution,
-        "clean": clean_flags,
-        "py_clean": py_clean_flags,
-        "uses_python": {n: _uses_python(n) for n in names},
-        "all_suspect": all_suspect,
-        "calibration": {
-            # minima FROZEN after the scheduled passes — the same reference
-            # the redo decisions used (r5 ADVICE consistency fix)
-            "probe_min": round(probe_min, 4),
-            "probe_median": round(sorted(probe_log)[len(probe_log) // 2], 4),
-            "probe_max": round(max(probe_log), 4),
-            "probe_min_all": round(min(probe_log), 4),
-            "probe_drift_gate": PROBE_DRIFT,
-            "pyprobe_min": round(pyprobe_min, 4),
-            "pyprobe_median": round(sorted(pyprobe_log)[len(pyprobe_log) // 2], 4),
-            "pyprobe_max": round(max(pyprobe_log), 4),
-            "pyprobe_min_all": round(min(pyprobe_log), 4),
-            "pyprobe_drift_gate": PYPROBE_DRIFT,
-            "n_probes": len(probe_log),
-            "n_redone": n_redone,
-        },
+        "queries_best": best,
+        "queries_cold": cold,
+        "cold_total": round(sum(cold.values()), 3),
+        "queries_warm": warm,
+        "warm_total": round(sum(warm.values()), 3),
+        "passes": {n: [round(t, 3) for t in p] for n, p in passes.items()},
         "spread": {
             n: {
-                "min": min(p),
-                "median": sorted(p)[len(p) // 2],
-                "max": max(p),
+                "min": round(min(p), 3),
+                "median": round(sorted(p)[len(p) // 2], 3),
+                "max": round(max(p), 3),
             }
             for n, p in passes.items()
         },
@@ -652,14 +166,7 @@ def main() -> None:
                 "metric": "headline_queries_total",
                 "value": total,
                 "unit": "sec",
-                "sentinel_s": sentinel_s,
-                "host_ratio": host_ratio,
-                "sentinel_io_s": sentinel_io_s,
-                "io_ratio": io_ratio,
-                "sentinel_sust_s": sentinel_sust_s,
-                "sust_ratio": sust_ratio,
-                "sust_med_ratio": sust_med_ratio,
-                "queries": {n: timings_best[n] for n in names},
+                "queries": best,
                 "sf": sf,
             },
             separators=(",", ":"),

@@ -23,19 +23,6 @@ def test_materialize_default_is_local_checkpoint(spark):
     assert out.count() == 10
 
 
-def test_materialize_disable_keeps_full_plan(spark):
-    from wfc3_cte_monitor_spark.checkpointing import DISABLE_CONF
-
-    df = spark.range(10).withColumn("v", F.col("id") * 2)
-    spark.conf.set(DISABLE_CONF, "true")
-    try:
-        out = materialize(df)
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        assert "LogicalRDD" not in plan, "introspection mode must not truncate"
-    finally:
-        spark.conf.set(DISABLE_CONF, "false")
-
-
 def test_materialize_reliable_writes_checkpoint_dir(spark, tmp_path):
     ckdir = str(tmp_path / "reliable_ckpt")
     spark.conf.set(RELIABLE_CONF, "true")

@@ -11,10 +11,11 @@ from wfc3_cte_monitor_spark.functions.dedup import (
     candidate_pairs,
     lsh_bands,
     minhash_signature,
+    minhash_signature_pairs,
     simhash16,
 )
 from wfc3_cte_monitor_spark.functions.similarity import cosine_topk
-from wfc3_cte_monitor_spark.functions.text import shingles, tokens
+from wfc3_cte_monitor_spark.functions.text import portable_hash64, shingles, tokens
 from wfc3_cte_monitor_spark.sources.catalog import load_table
 
 
@@ -312,3 +313,26 @@ def test_duplicated_spans_same_doc_repeat_not_duplicate(spark):
     rows = [(1, "a b c d e x a b c d e"), (2, "q r s t u v w x y z")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     assert duplicated_spans(docs, k=5).count() == 0
+
+
+def test_minhash_signature_pairs_hash_col_matches_default(spark):
+    """``hash_col=`` trusts the caller that the column holds
+    ``portable_hash64(shingle)`` (d03 passes its materialized hash): given
+    exactly that column, the signatures must equal the default path's
+    row for row."""
+    rows = [
+        (1, "a b c"), (1, "b c d"), (1, "c d e"),
+        (2, "a b c"), (2, "x y z"),
+        (3, "q r s"),
+        (4, ""),
+    ]
+    pairs = spark.createDataFrame(rows, "doc_id long, shingle string")
+    default = minhash_signature_pairs(pairs, "doc_id", "shingle")
+    hashed = minhash_signature_pairs(
+        pairs.withColumn("shid", portable_hash64(F.col("shingle"))),
+        "doc_id", "shingle", hash_col="shid",
+    )
+    assert default.columns == hashed.columns
+    got, want = sorted(hashed.collect()), sorted(default.collect())
+    assert len(want) == 4
+    assert got == want

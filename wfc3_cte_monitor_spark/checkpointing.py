@@ -30,19 +30,13 @@ from pyspark.sql import DataFrame
 
 RELIABLE_CONF = "spark.wfc3.checkpoint.reliable"
 DIR_CONF = "spark.wfc3.checkpoint.dir"
-# Plan-introspection escape hatch: a checkpoint re-roots the plan at a
-# LogicalRDD, which HIDES the truncated subtree from any plan inspector
-# (bench.py's Python-node detector would read an e01 full of pandas UDFs
-# as Python-free). Tooling that needs the WHOLE logical plan sets this to
-# skip truncation while it builds the throwaway introspection DataFrame.
-DISABLE_CONF = "spark.wfc3.checkpoint.disable"
 
 
 def reliable_enabled(spark) -> bool:
     return spark.conf.get(RELIABLE_CONF, "false").lower() == "true"
 
 
-def materialize(df: DataFrame, eager: bool = False, force: bool = False) -> DataFrame:
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     """Truncate lineage at ``df``: ``localCheckpoint`` by default,
     reliable ``checkpoint`` when ``spark.wfc3.checkpoint.reliable=true``.
 
@@ -52,19 +46,6 @@ def materialize(df: DataFrame, eager: bool = False, force: bool = False) -> Data
     read-then-overwrite hygiene (streaming stores) where the blocking
     barrier is the point.
 
-    ``force=True`` truncates even in introspection mode: ITERATIVE
-    operators that execute convergence probes while the plan is being
-    CONSTRUCTED (connected_components' per-round Σlabel collect) must
-    keep per-round truncation or round k's probe re-executes rounds
-    1..k-1's untruncated lineage — the plan doubles per pointer-jumping
-    round, so a DISABLE_CONF build goes exponential (observed: bench's
-    Python-node inspector hung on d02 once the incr_cc arm tripled the
-    CC invocations). The introspection loss is nil in practice: by the
-    time the inspector sees the query, the fixpoint's rounds have
-    already EXECUTED during construction, so any Python eval upstream of
-    the loop ran (and was timed) regardless of what the final plan
-    string shows.
-
     With AQE on, a lazy truncation point whose subtree holds a shuffle
     runs that subtree's query stages driver-side while the plan is
     BUILT, not when it is first used (t01's "planning tax"). Relocating
@@ -73,8 +54,6 @@ def materialize(df: DataFrame, eager: bool = False, force: bool = False) -> Data
     reports those jobs under the ``phase=build`` tag.
     """
     spark = df.sparkSession
-    if not force and spark.conf.get(DISABLE_CONF, "false").lower() == "true":
-        return df  # introspection mode: keep the full plan visible
     if not reliable_enabled(spark):
         return df.localCheckpoint(eager=eager)
     sc = spark.sparkContext

@@ -32,13 +32,14 @@ BAND_SIZE = 4  # 4 bands × 4 rows
 
 # Second-seed discriminator for fingerprint128 (any fixed literal works;
 # xxhash64 folds every argument into one stream, so prepending a
-# distinct constant yields an independent second 64-bit hash).
+# distinct constant yields a second 64-bit hash of the same function —
+# a different value, but not an independent hash).
 _FP_SEED2 = 0x9E3779B9
 
 
 def fingerprint128(col: str | Column) -> tuple[Column, Column]:
-    """Two independent 64-bit ``xxhash64`` fingerprints of a column —
-    the exact-collapse group key (r13 verdict ask #1).
+    """Two 64-bit ``xxhash64`` fingerprints of a column — the
+    exact-collapse group key (r13 verdict ask #1).
 
     The r13 collapses keyed the group id with ``min(id) OVER (PARTITION
     BY <content>)``: WindowExec has no map-side combine, so every
@@ -51,9 +52,16 @@ def fingerprint128(col: str | Column) -> tuple[Column, Column]:
 
     128 bits, not 64: at 100 TB corpus sizes (~5e10 documents) a single
     64-bit hash collides by the birthday bound (expected at ~2^32
-    rows); two independent xxhash64 values push the collision
-    probability below 1e-17 at that scale, so grouping by the pair is
-    grouping by content. xxhash64 handles strings and arrays alike
+    rows). The two halves are NOT independent hashes: both are the same
+    non-cryptographic function, the second over the input with a
+    constant prepended, so they are correlated by construction. The
+    collision bound is therefore empirical, for non-adversarial input:
+    if the pair behaves like a 128-bit random hash on real content, the
+    collision probability stays below 1e-17 at that scale and grouping
+    by the pair is grouping by content. Adversarially chosen input
+    (xxhash64 is not collision-resistant) can collide both halves, and
+    a collision silently merges distinct contents; nothing here detects
+    it. xxhash64 handles strings and arrays alike
     (arrays hash element-wise), which covers text, names and embedding
     vectors with one definition.
     """

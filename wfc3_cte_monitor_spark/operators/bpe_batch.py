@@ -149,9 +149,7 @@ def compatible_topm(
     top = materialize(
         counts.where(F.expr(f"h DIV {pack} <> h % {pack}"))
         .orderBy(F.desc("cnt"), F.asc("h"), F.asc("mx"))
-        .limit(window),
-        eager=False,
-        force=True,
+        .limit(window)
     )
     rnk = _rank_small(top).selectExpr(
         "h", "mx", "cnt", "rnk",
@@ -249,16 +247,12 @@ def batched_bpe_train(
         counts = (
             counts0 if r == 0 and counts0 is not None else bigram_counts(cur)
         )
-        batch = materialize(
-            compatible_topm(counts, m, r, probe_mult),
-            eager=False,
-            force=True,
-        )
+        batch = materialize(compatible_topm(counts, m, r, probe_mult))
         tagged = batch.select(
             F.lit(r).cast("int").alias("round"), "rnk", "ar", "br", "nid", "cnt"
         )
         vocab = tagged if vocab is None else vocab.unionAll(tagged)
-        cur = materialize(apply_merge_batch(cur, batch), force=True)
+        cur = materialize(apply_merge_batch(cur, batch))
     return cur, vocab
 
 
@@ -309,9 +303,7 @@ def dense_token_ids_with_count(
     # materialized: salted_rank evaluates its input's lineage three
     # times (bounds / rank pass / bucket counts), and this lineage is a
     # corpus-wide explode+distinct shuffle — pay it once
-    toks = materialize(
-        ths.select(F.explode("th").alias("tok")).distinct(), force=True
-    )
+    toks = materialize(ths.select(F.explode("th").alias("tok")).distinct())
     v: int | None = None
     if n_buckets is None:
         v = toks.count()
@@ -425,7 +417,7 @@ def encode_with_dict(
         batch = vocab.where(F.col("round") == r).select("ar", "br", "nid")
         cur = apply_merge_batch(cur, batch, pack=DICT_PACK)
         if (r + 1) % _MAT_EVERY == 0 and r + 1 < rounds:
-            cur = materialize(cur, force=True)
+            cur = materialize(cur)
     return cur
 
 
@@ -504,7 +496,7 @@ def decode_with_dict(
         batch = vocab.where(F.col("round") == r).select("ar", "br", "nid")
         cur = expand_merge_batch(cur, batch)
         if (i + 1) % _MAT_EVERY == 0 and i + 1 < rounds:
-            cur = materialize(cur, force=True)
+            cur = materialize(cur)
     return cur
 
 
@@ -551,7 +543,7 @@ def batched_bpe_train_dict(
     if m < 1:
         raise ValueError(f"batch size m must be >= 1, got {m}")
     dense, vocab_base = dense_token_ids_with_count(ths)
-    dict_df = materialize(dense, force=True)
+    dict_df = materialize(dense)
     # the adaptive-bucket path already counted the vocabulary; reuse it
     if vocab_base is None:
         vocab_base = dict_df.count()
@@ -561,7 +553,7 @@ def batched_bpe_train_dict(
             f"dictionary size {vocab_base} + {rounds * m} merges exceeds "
             f"DICT_PACK={DICT_PACK}: ids would no longer pack injectively"
         )
-    cur = materialize(translate_corpus(ths, dict_df), force=True)
+    cur = materialize(translate_corpus(ths, dict_df))
     vocab: DataFrame | None = None
     for r in range(rounds):
         batch = materialize(
@@ -572,15 +564,13 @@ def batched_bpe_train_dict(
                 probe_mult,
                 pack=DICT_PACK,
                 vocab_base=vocab_base,
-            ),
-            eager=False,
-            force=True,
+            )
         )
         tagged = batch.select(
             F.lit(r).cast("int").alias("round"), "rnk", "ar", "br", "nid", "cnt"
         )
         vocab = tagged if vocab is None else vocab.unionAll(tagged)
-        cur = materialize(apply_merge_batch(cur, batch, pack=DICT_PACK), force=True)
+        cur = materialize(apply_merge_batch(cur, batch, pack=DICT_PACK))
     return cur, vocab, dict_df
 
 

@@ -94,16 +94,14 @@ def connected_components(
         jump = hashmin.select(
             F.col(id_col).alias("pj_id"), F.col("label").alias("pj_label")
         )
-        # force=True: per-round truncation is the ALGORITHM here, not
-        # optional hygiene — introspection mode (checkpoint.disable)
-        # would otherwise make each convergence probe re-execute all
-        # prior rounds' lineage (exponential; see checkpointing.py).
+        # per-round truncation is the ALGORITHM here, not optional
+        # hygiene: without it each convergence probe re-executes all
+        # prior rounds' lineage (the plan doubles per round).
         labels = materialize(
             hashmin.join(jump, hashmin["label"] == jump["pj_id"], "left").select(
                 F.col(id_col),
                 F.coalesce("pj_label", "label").alias("label"),
-            ),
-            force=True,
+            )
         )
         cur_sum = labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
@@ -213,13 +211,10 @@ def _component_remap(
     # edge input every convergence round (plus the round-1 incident
     # distinct) — unmaterialized, maintenance cost becomes
     # O(rounds × store-scan), breaking the "two store lookups, cost ∝
-    # delta" contract. force=True because the CC loop probes convergence
-    # during CONSTRUCTION (see checkpointing.materialize); repartition by
-    # dst first so every round's edges⋈labels join reuses the cached
-    # partitioning (same hygiene as d02's edge list).
-    contracted = contracted.repartition("dst").transform(
-        lambda d: materialize(d, force=True)
-    )
+    # delta" contract. Repartition by dst first so every round's
+    # edges⋈labels join reuses the cached partitioning (same hygiene as
+    # d02's edge list).
+    contracted = contracted.repartition("dst").transform(materialize)
     touched = (
         contracted.select(F.col("src").alias(id_col))
         .union(contracted.select(F.col("dst").alias(id_col)))
@@ -262,8 +257,7 @@ def incremental_components_with_reps(
     """
     labels = store.select(id_col, "label")
     remap = materialize(
-        _component_remap(labels, new_edges, id_col=id_col, max_iter=max_iter),
-        force=True,
+        _component_remap(labels, new_edges, id_col=id_col, max_iter=max_iter)
     )
     # one winner row per old component: the store row where the doc IS
     # its component's rep (exactly one per component by construction)

@@ -31,9 +31,7 @@ hashes bit-equal.
 
 Iteration hygiene: the mass relation is materialized per round
 (lineage truncation, same rule as connected_components / the BPE
-trainer) — but NOT force=True: the loop is fixed-k and fully LAZY (no
-convergence collects), so introspection mode may keep the whole plan
-visible.
+trainer).
 """
 
 from __future__ import annotations

@@ -157,7 +157,7 @@ def dict_bpe_arms(thd: DataFrame) -> DataFrame:
     # ADVICE contract) — the gate exercises the derivation path.
     # materialized: the encoded corpus feeds two arms (inferD + the
     # decodeD roundtrip) — pay the lazy chain once
-    inf = materialize(encode_with_dict(thd, dict_df, vocab), force=True)
+    inf = materialize(encode_with_dict(thd, dict_df, vocab))
 
     def _fp(col):
         return portable_hash64(

@@ -512,11 +512,7 @@ def d02_lsh_dedup_pipeline(spark, sf_dir):
     # every propagation round's edges⋈labels join reuses the cached
     # partitioning and only the (tiny) labels side shuffles per round.
     # Deterministic, so the oracle comparison is unaffected.
-    # force=True: this relation feeds the ITERATIVE CC consumers (full,
-    # base and contracted CC all probe convergence during construction);
-    # introspection mode must not re-expand the shingle pipeline into
-    # every round's probe (see checkpointing.materialize).
-    edges = edges.repartition("dst").transform(lambda d: materialize(d, force=True))
+    edges = edges.repartition("dst").transform(materialize)
     labels = connected_components(docs.select("doc_id"), edges)
     # REPRESENTATIVE SELECTION — the dedup DECISION a pipeline
     # materializes: keep the richest-vocabulary doc per cluster (distinct
@@ -557,11 +553,9 @@ def d02_lsh_dedup_pipeline(spark, sf_dir):
     # projection) and base_store THREE more (remap lookup, winner
     # filter, final remap join) plus the eager construction probes —
     # materialize both or the base CC's final join re-executes once per
-    # consumer. force=True: the downstream _component_remap collects
-    # convergence sums during CONSTRUCTION (see checkpointing.py).
+    # consumer.
     base_labels = materialize(
-        connected_components(docs.select("doc_id"), edges.where(~is_delta_edge)),
-        force=True,
+        connected_components(docs.select("doc_id"), edges.where(~is_delta_edge))
     )
     base_reps = (
         base_labels.join(nu_rel, "doc_id")
@@ -570,8 +564,7 @@ def d02_lsh_dedup_pipeline(spark, sf_dir):
     )
     base_store = materialize(
         base_labels.join(nu_rel, "doc_id").join(base_reps, "label")
-        .select("doc_id", "label", "nu", "rep_id"),
-        force=True,
+        .select("doc_id", "label", "nu", "rep_id")
     )
     maintained = incremental_components_with_reps(
         base_store, edges.where(is_delta_edge)

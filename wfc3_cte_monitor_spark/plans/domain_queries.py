@@ -45,6 +45,7 @@ from ..operators.sessionize import find_epochs_sql
 from ..operators.sigma_clip import sigma_clip_sql
 from ..schemas import FLUXBIN_LABELS
 from ..sources.catalog import load_table
+from .pipeline import attach_size_estimate
 from .registry import register
 
 _EPOCH0 = "1992-01-01"
@@ -52,35 +53,23 @@ _WEEK_SUBSET = "week % 7 < 3"  # gap pattern 7,7,35 → both epoch-walk branches
 
 
 def _materialize_fi(df: DataFrame) -> DataFrame:
-    """Materialization strategy for the tiny fileinfo analog that fans out
+    """Lazy lineage truncation for the tiny fileinfo analog that fans out
     into the pair map / epoch dimension / band join.
 
     Round-3 added an eager localCheckpoint here and the trend-query bench
-    regressed ~2x on a noisy host; the env knob lets an interleaved A/B
-    (scripts/ab_checkpoint.py) compare eager / lazy / none within one JVM
-    without code edits. Measured (sf0.1, local[32], interleaved best-of-5):
-    cs03 eager 5.78 / lazy 4.75 / none 4.59; n03 eager 5.81 / lazy 4.50 /
-    none 5.86. Eager loses on both — the blocking serial materialization
-    sits inside the timed query. Default is the overall winner: LAZY
-    checkpoint — the fan-out still collapses to one scan of cached blocks
-    on first use, without the up-front serial barrier.
+    regressed ~2x on a noisy host. Measured (sf0.1, local[32], interleaved
+    best-of-5): cs03 eager 5.78 / lazy 4.75 / none 4.59; n03 eager 5.81 /
+    lazy 4.50 / none 5.86. Eager loses on both — the blocking serial
+    materialization sits inside the timed query. LAZY is the overall
+    winner: the fan-out still collapses to one scan of cached blocks on
+    first use, without the up-front serial barrier.
     """
-    import os
-
-    from .pipeline import attach_size_estimate
-
-    mode = os.environ.get("WFC3_TREND_FI_CKPT", "lazy")
-    if mode == "eager":
-        out = df.transform(materialize, eager=True)
-    elif mode == "lazy":
-        out = df.transform(materialize)
-    else:
-        return df
     # the checkpointed plan roots at a LogicalRDD with unknown stats,
     # which would blind the pair-broadcast size branch downstream — carry
     # the pre-checkpoint relation's estimate across the boundary so auto
     # still decides on the real exposure-dimension size
-    return attach_size_estimate(out, df)
+    return attach_size_estimate(materialize(df), df)
+
 
 # One analog target carries a '6791'-bearing name so BOTH branches of the
 # skipbins rule (skip two bins for '6791' targets, one otherwise —
@@ -737,8 +726,8 @@ def n03_model_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # explain time). The trend table is tiny — materialize it once,
         # LAZILY: an eager checkpoint is a serial blocking barrier inside
         # the timed query (interleaved A/B at sf0.1: lazy 3.72s best vs
-        # eager 4.44s, lazy faster on 2 of 3 pairs), same verdict as the
-        # fi-analog knob in _materialize_fi.
+        # eager 4.44s, lazy faster on 2 of 3 pairs), same verdict as
+        # _materialize_fi's.
         .transform(materialize)
     )
     fit = quadfit_agg(trend, x="_x", y="mean_slope",
