@@ -9,6 +9,8 @@ import re
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from wfc3_cte_monitor_spark.plans.registry import load_all
 
 SF = "/root/testdata/sf0.001"
@@ -67,8 +69,7 @@ def test_candidate_generation_never_cross_joins(spark, name):
 
 def test_trend_epoch_dimension_has_no_python(spark):
     # the pairwise epoch walk is pure window functions now — no Python
-    # evaluation operator may appear in cs03 (the 8-row binspec literal's
-    # applySchemaToPythonRDD is plan-construction, not per-row eval)
+    # evaluation operator may appear in cs03
     plan = _plan(spark, "cs03_cte_vs_time")
     for op in ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas", "MapInPandas"):
         assert op not in plan, op
@@ -343,3 +344,79 @@ def test_t01_dict_bpe_plan_shape(spark):
     assert "BroadcastHashJoin" in plan
 
 
+
+
+def _rdd_scans(df) -> list[str]:
+    qe = df._jdf.queryExecution()
+    plans = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+    return re.findall(r"LogicalRDD|ExistingRDD", plans)
+
+
+def test_constant_tables_plan_without_python_rdd(spark, tmp_path):
+    # The engine's constant tables (bin spec, zero-fill, salt dimension,
+    # prefix mapping, WCS table, skip list) are JVM-only relations: a
+    # createDataFrame(<list>) would scan a Python RDD (one Python task
+    # per partition) inside an otherwise pure-JVM plan. Each literal_table
+    # must equal the createDataFrame it replaced (names, types, rows),
+    # and every plan that carries one must have no RDD scan at all.
+    from pyspark.sql.types import DataType
+
+    from wfc3_cte_monitor_spark.operators.bins import FLUX_BINS, binspec_df
+    from wfc3_cte_monitor_spark.plans.domain_queries import (
+        _S01_WCS,
+        analog_fileinfo,
+        analog_phot,
+    )
+    from wfc3_cte_monitor_spark.plans.parity_queries import _SALT_DIM
+    from wfc3_cte_monitor_spark.plans.pipeline import compute_results, query_for_pair
+    from wfc3_cte_monitor_spark.sources.catalog import literal_table
+    from wfc3_cte_monitor_spark.sources.discovery import DEFAULT_SKIP_VISITS, apply_skip_lists
+
+    tables = {
+        "bin_lo double, bin_hi double, fluxbin string": [
+            (float(lo), float(hi), f"{int(lo)}_{int(hi)}") for lo, hi in FLUX_BINS
+        ],
+        "fluxbin string, aperture int": [
+            (f"{int(lo)}_{int(hi)}", a) for lo, hi in FLUX_BINS for a in (3, 5)
+        ],
+        "skew_key bigint, gain double": _SALT_DIM,
+        "prefix string, label string": [
+            ("1", "urgent"), ("2", "high"), ("3", "medium"), ("4", "unspecified"), ("5", "low")
+        ],
+        "targname string, ra0 double, dec0 double, ax double, bx double,"
+        " x0 double, ay double, by double, y0 double": _S01_WCS,
+        "proposid string, visit string": DEFAULT_SKIP_VISITS,
+    }
+    for ddl, rows in tables.items():
+        new = literal_table(spark, rows, ddl)
+        assert not _rdd_scans(new), ddl
+        want = [(f.name, f.dataType) for f in DataType.fromDDL(ddl).fields]
+        assert [(f.name, f.dataType) for f in new.schema] == want
+        assert new.collect() == spark.createDataFrame(rows, ddl).collect()
+        empty = literal_table(spark, [], ddl)
+        assert [(f.name, f.dataType) for f in empty.schema] == want
+        assert empty.count() == 0 and not _rdd_scans(empty)
+    assert [(f.name, f.dataType.simpleString()) for f in binspec_df(spark).schema] == [
+        ("bin_lo", "double"), ("bin_hi", "double"), ("fluxbin", "string")
+    ]
+
+    # the sites, over parquet-rooted inputs: the multi-aperture zero-fill
+    # (pairs passed un-checkpointed so the plan has no RDD leaf of its
+    # own), the three registered queries and the skip-list anti-join
+    fi, ph = analog_fileinfo(spark, SF), analog_phot(spark, SF)
+    pairs = query_for_pair(fi).select("targname", "imagename_1", "imagename_2").withColumn(
+        "pair_id", F.xxhash64("targname", "imagename_1", "imagename_2")
+    )
+    sites = {"zero_fill": compute_results(fi, ph, aperture=[3, 5], pairs=pairs)}
+    for name in ("j02_pair_selfjoin", "j08_prefix_lookup", "s01_header_derivations"):
+        sites[name] = load_all()[name].fn(spark, SF)
+    images = tmp_path / "images"
+    spark.range(4).select(
+        F.lit("12379").alias("proposid"),
+        F.format_string("%02d", F.col("id") + 6).alias("visit"),
+    ).write.parquet(str(images))
+    kept = apply_skip_lists(spark.read.parquet(str(images)))
+    sites["skip_lists"] = kept
+    for name, df in sites.items():
+        assert not _rdd_scans(df), name
+    assert sorted(r["visit"] for r in kept.collect()) == ["06", "08", "09"]

@@ -179,6 +179,79 @@ def test_incremental_results_batch_equals_full_recompute(spark):
     assert merged_rows == full_rows
 
 
+def test_incremental_merge_same_mode_group_keeps_untouched_pairs(spark, monkeypatch):
+    """A batch lands BOTH chips of one mode-key group that already holds
+    an older chip pair, so the group's pair relation is the 2x2 cross
+    product: three touched pairs (each with a new side) and the old pair,
+    whose two images are both partners of new exposures but which is
+    itself untouched. The merge must recompute exactly the touched
+    pairs, carry the old pair's stored row over unchanged, replace only
+    the batch's aperture and equal a full recompute; the pair_id guard
+    must run on the touched pairs when the session enables it."""
+    from wfc3_cte_monitor_spark.plans import pipeline
+    from wfc3_cte_monitor_spark.plans.pipeline import compute_results
+    from wfc3_cte_monitor_spark.streaming.incremental import (
+        affected_pairs,
+        incremental_results_batch,
+    )
+    from wfc3_cte_monitor_spark.testing.fixtures import make_domain_fixtures
+
+    _, fileinfo, phot_long = make_domain_fixtures(spark)
+    group = (F.col("targname") == "ngc104") & (F.col("dateobs") == 56000) & (F.col("ctecorr") == 0)
+    renamed = F.concat(F.lit("late_"), F.col("imagename"))
+    # the late exposures repeat the group's mode keys under new names, with
+    # chip-1 fluxes scaled so their pairs fit different slopes
+    new_fi = fileinfo.where(group).withColumn("imagename", renamed).cache()
+    group_images = fileinfo.where(group).select("imagename", "chip")
+    new_ph = (
+        phot_long.join(F.broadcast(group_images), "imagename")
+        .withColumn("flux", F.when(F.col("chip") == 1, F.col("flux") * 1.003)
+                    .otherwise(F.col("flux")))
+        .withColumn("imagename", renamed)
+        .select(*phot_long.columns)
+    )
+    corpus = fileinfo.unionByName(new_fi).cache()
+    phot = phot_long.unionByName(new_ph).cache()
+    old_pair = [r["imagename"] for r in group_images.orderBy("chip").collect()]
+
+    touched = {(r["imagename_1"], r["imagename_2"])
+               for r in affected_pairs(new_fi, corpus).collect()}
+    assert len(touched) == 3 and tuple(old_pair) not in touched
+
+    key = lambda r: (r["targname"], r["imagename_1"], r["imagename_2"], r["aperture"])
+    store3 = compute_results(fileinfo, phot, aperture=3).cache()
+    # rows of another aperture share the touched pair keys and must survive
+    store5 = compute_results(corpus, phot, aperture=5).cache()
+    store0 = store3.unionByName(store5)
+
+    guarded = []
+    real_guard = pipeline.assert_pair_id_unique
+    monkeypatch.setattr(pipeline, "assert_pair_id_unique",
+                        lambda keyed: guarded.append(keyed.count()) or real_guard(keyed))
+    spark.conf.set("spark.wfc3.pipeline.assertPairIdUnique", "true")
+    try:
+        merged = incremental_results_batch(store0, new_fi, corpus, phot, aperture=3)
+    finally:
+        spark.conf.set("spark.wfc3.pipeline.assertPairIdUnique", "false")
+    assert guarded == [3]
+    assert merged.columns == store0.columns
+    merged_rows = [tuple(r) for r in merged.collect()]
+    want = [tuple(r) for r in compute_results(corpus, phot, aperture=3).collect()]
+    want += [tuple(r) for r in store5.collect()]
+    assert sorted(merged_rows, key=str) == sorted(want, key=str)
+
+    # the old pair's row is carried over from the store, not recomputed
+    poisoned = store3.withColumn(
+        "slope_2000_8000",
+        F.when((F.col("imagename_1") == old_pair[0]) & (F.col("imagename_2") == old_pair[1]),
+               F.lit(-1.0)).otherwise(F.col("slope_2000_8000")),
+    )
+    got = {key(r): r["slope_2000_8000"]
+           for r in incremental_results_batch(poisoned, new_fi, corpus, phot).collect()}
+    assert got[("ngc104", *old_pair, 3.0)] == -1.0
+    assert len(got) == store3.count() + 3
+
+
 def test_maintain_results_stream_file_source(spark, tmp_path):
     """End-to-end: exposures dropped as files -> availableNow stream ->
     per-batch incremental MERGE into the parquet Results store.

@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.catalog import literal_table
+
 # Reference bin edges: wfc3_cte_monitor/config.py:14-16.
 FLUX_BINS: list[tuple[int, int]] = [
     (250, 500),
@@ -33,9 +35,10 @@ FLUX_BINS: list[tuple[int, int]] = [
 
 
 def binspec_df(spark: SparkSession, bins: Sequence[tuple[float, float]] = FLUX_BINS) -> DataFrame:
-    return spark.createDataFrame(
+    return literal_table(
+        spark,
         [(float(lo), float(hi), f"{int(lo)}_{int(hi)}") for lo, hi in bins],
-        schema="bin_lo double, bin_hi double, fluxbin string",
+        "bin_lo double, bin_hi double, fluxbin string",
     )
 
 

@@ -44,7 +44,7 @@ from ..operators.regression import linregress_sql
 from ..operators.sessionize import find_epochs_sql
 from ..operators.sigma_clip import sigma_clip_sql
 from ..schemas import FLUXBIN_LABELS
-from ..sources.catalog import load_table
+from ..sources.catalog import literal_table, load_table
 from .pipeline import attach_size_estimate
 from .registry import register
 
@@ -590,7 +590,8 @@ def s01_header_derivations(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(1.0) - (k % 180) / 200.0).alias("dec"),
     )
     derived = derive_fileinfo_columns(headers, flashlvl_desired=0)
-    wcs = spark.createDataFrame(
+    wcs = literal_table(
+        spark,
         _S01_WCS,
         "targname string, ra0 double, dec0 double, ax double, bx double,"
         " x0 double, ay double, by double, y0 double",

@@ -17,7 +17,7 @@ from ..operators.pairs import pair_self_join
 from ..operators.regression import linregress_agg, linregress_sql
 from ..operators.sessionize import sessionize
 from ..operators.sigma_clip import sigma_clip, sigma_clip_sql
-from ..sources.catalog import load_table
+from ..sources.catalog import literal_table, load_table
 from .cte_slopes import cte_slope_pairs, cte_slope_pairs_oracle
 from .registry import register
 
@@ -310,7 +310,7 @@ def j02_pair_selfjoin(spark, sf_dir):
         "l_orderkey",
         "l_linenumber",
     )
-    dim = spark.createDataFrame(_SALT_DIM, "skew_key bigint, gain double")
+    dim = literal_table(spark, _SALT_DIM, "skew_key bigint, gain double")
     joined = salted_join(
         big, dim.hint("shuffle_hash"), keys=["skew_key"], n_salts=8,
         scatter_cols=["l_orderkey", "l_linenumber"],

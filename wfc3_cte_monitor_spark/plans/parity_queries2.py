@@ -16,7 +16,7 @@ from ..operators.pairs import matching_lookup, rank_pairing
 from ..operators.sigma_clip import SIGMA13_ITERS, sigma_clip, sigma_clip_sql
 from ..operators.spatial import point_in_quad, point_in_quad_sql
 from ..operators.upsert import scd2, upsert
-from ..sources.catalog import load_table
+from ..sources.catalog import literal_table, load_table
 from .ascii_roundtrip import ASCII_ARMS_SQL, ascii_roundtrip_arms
 from .registry import register
 
@@ -334,9 +334,10 @@ def j07_epoch_band_join(spark, sf_dir):
 def j08_prefix_lookup(spark, sf_dir):
     """8-row mapping-table broadcast join replacing an if-chain."""
     o = load_table(spark, sf_dir, "orders")
-    mapping = o.sparkSession.createDataFrame(
+    mapping = literal_table(
+        spark,
         [("1", "urgent"), ("2", "high"), ("3", "medium"), ("4", "unspecified"), ("5", "low")],
-        schema="prefix string, label string",
+        "prefix string, label string",
     )
     return (
         o.withColumn("prefix", F.substring("o_orderpriority", 1, 1))

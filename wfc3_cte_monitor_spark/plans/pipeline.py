@@ -23,6 +23,7 @@ from ..operators.phot_layout import results_long_to_wide
 from ..operators.regression import linregress_agg
 from ..operators.sigma_clip import sigma_clip
 from ..schemas import PAIR_MODE_KEYS
+from ..sources.catalog import literal_table
 
 
 # --- query layer (database_queries.py parity) ------------------------------
@@ -239,8 +240,8 @@ def _pairs_broadcastable(fileinfo: DataFrame) -> bool:
         return False
     return est <= 4 * thresh
 
-def _keyed_pairs(fileinfo: DataFrame) -> DataFrame:
-    """The pair relation with its compact surrogate key, materialized
+def key_pairs(pairs: DataFrame) -> DataFrame:
+    """A pair relation with its compact surrogate key, materialized
     once (lazily): every shuffle, sort and hash between the alignment and
     the regression output keys on one bigint ``pair_id`` instead of three
     ~20-char strings (measured: the align shuffle is the DAG's dominant
@@ -250,7 +251,9 @@ def _keyed_pairs(fileinfo: DataFrame) -> DataFrame:
     this same relation by id after the data-sized stages. The checkpoint
     is the module's diamond-reuse hygiene: the relation feeds the pair
     map, the re-attach join and (in compute_results) the zero-fill frame,
-    and without it the fileinfo self-join subtree is embedded per use.
+    and without it the subtree that derived ``pairs`` (the fileinfo
+    self-join; in incremental maintenance also the corpus dedup and the
+    touched-pair semi-join) is embedded per use.
 
     Surrogate-key caveats (both benign here, guarded for real corpora):
     a 64-bit hash collision silently merges two pairs' measurements, and
@@ -265,12 +268,11 @@ def _keyed_pairs(fileinfo: DataFrame) -> DataFrame:
     injectivity on its real pair population; the bench session leaves
     it off — the guard is a correctness instrument, not query work."""
     keyed = (
-        query_for_pair(fileinfo)
-        .select("targname", "imagename_1", "imagename_2")
+        pairs.select("targname", "imagename_1", "imagename_2")
         .withColumn("pair_id", F.xxhash64("targname", "imagename_1", "imagename_2"))
         .transform(materialize)
     )
-    spark = fileinfo.sparkSession
+    spark = pairs.sparkSession
     if spark.conf.get("spark.wfc3.pipeline.assertPairIdUnique", "false") == "true":
         assert_pair_id_unique(keyed)
     return keyed
@@ -278,7 +280,7 @@ def _keyed_pairs(fileinfo: DataFrame) -> DataFrame:
 
 def assert_pair_id_unique(keyed: DataFrame) -> None:
     """One count-distinct job proving the pair_id surrogate is injective
-    on this corpus; raises if two pairs collided (see ``_keyed_pairs``'s
+    on this corpus; raises if two pairs collided (see ``key_pairs``'s
     caveats: 64-bit hash collision, or xxhash64's NULL-skip aliasing)."""
     row = keyed.agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -317,14 +319,14 @@ def compute_results_long(fileinfo: DataFrame, phot_long: DataFrame,
 
     ``pairs`` lets a caller that also needs the pair relation (e.g. the
     wide zero-fill in :func:`compute_results`) pass the shared
-    :func:`_keyed_pairs` materialization instead of deriving it twice.
+    :func:`key_pairs` materialization instead of deriving it twice.
     """
     spark = fileinfo.sparkSession
     apertures = [aperture] if isinstance(aperture, int) else sorted(aperture)
     multi = len(apertures) > 1
     ap_cols = ["aperture"] if multi else []
     if pairs is None:
-        pairs = _keyed_pairs(fileinfo)
+        pairs = key_pairs(query_for_pair(fileinfo))
     # size-based branch (see _pairs_broadcastable): estimated on the
     # exposure dimension. hint = identity drops every pair-dimension
     # broadcast at once and the joins become shuffled equi-joins.
@@ -419,7 +421,8 @@ def compute_results_long(fileinfo: DataFrame, phot_long: DataFrame,
 
 def compute_results(fileinfo: DataFrame, phot_long: DataFrame,
                     aperture: int | Sequence[int] = 3,
-                    sigma: float = 4.0, iterations: int = 3) -> DataFrame:
+                    sigma: float = 4.0, iterations: int = 3,
+                    pairs: DataFrame | None = None) -> DataFrame:
     """fileinfo + phot (long view) → wide Results rows, one per
     (imagename_1, imagename_2, aperture).
 
@@ -435,6 +438,11 @@ def compute_results(fileinfo: DataFrame, phot_long: DataFrame,
     imagename_2, aperture), table_definitions/results.txt:1-29) in ONE
     pass — aperture rides as a grouping column end-to-end instead of
     re-running the DAG per radius.
+
+    ``pairs`` (a :func:`key_pairs` relation) restricts the output to
+    those pairs: incremental maintenance passes its touched pairs, and
+    the phot fan-in then reads only their images through the pair map.
+    ``fileinfo`` still sizes the pair-dimension broadcast branch.
     """
     spark = fileinfo.sparkSession
     apertures = [aperture] if isinstance(aperture, int) else sorted(aperture)
@@ -443,10 +451,10 @@ def compute_results(fileinfo: DataFrame, phot_long: DataFrame,
     # ONE pair relation for the whole query: the long pipeline's pair map
     # + re-attach AND the zero-fill frame below all read the same
     # materialization instead of re-deriving the fileinfo self-join per use
-    keyed = _keyed_pairs(fileinfo)
+    if pairs is None:
+        pairs = key_pairs(query_for_pair(fileinfo))
     reg = compute_results_long(fileinfo, phot_long, aperture, sigma, iterations,
-                               pairs=keyed)
-    pairs = keyed.select("targname", "imagename_1", "imagename_2")
+                               pairs=pairs)
     group = ["targname", "imagename_1", "imagename_2", *ap_cols, "fluxbin"]
 
     # zero-fill spec: bins (× apertures) — both literal constants, so the
@@ -456,13 +464,16 @@ def compute_results(fileinfo: DataFrame, phot_long: DataFrame,
         # int() matches binspec_df/binspec_sql's label convention exactly
         # — a float edge would otherwise yield '250.0_500.0' here vs
         # '250_500' in reg and the left join would zero-fill everything
-        zero_fill = spark.createDataFrame(
+        zero_fill = literal_table(
+            spark,
             [(f"{int(lo)}_{int(hi)}", a) for lo, hi in FLUX_BINS for a in apertures],
             "fluxbin string, aperture int",
         )
     else:
         zero_fill = binspec_df(spark, FLUX_BINS).select("fluxbin")
-    all_bins = pairs.crossJoin(F.broadcast(zero_fill))
+    all_bins = pairs.select("targname", "imagename_1", "imagename_2").crossJoin(
+        F.broadcast(zero_fill)
+    )
     # reg is fit-dimension-sized — the pair relation (already treated as
     # broadcast-bounded by the pair map above) times a CONSTANT ≤
     # bins×apertures multiplier — so the hint is the same exposure-

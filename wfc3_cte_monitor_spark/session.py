@@ -64,6 +64,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Spark's default 100-entry codegen cache is smaller than one
+        # pass: measured per perfbench pass, incremental_refresh generates
+        # ~155 distinct classes and corpus_dedup (e02) ~170, so with 100
+        # entries every repeat pass recompiled 117 and ~160 of them (plus
+        # the JIT work on the fresh bytecode); with 1024 it recompiles 0
+        # and ~15 (classes whose source differs per pass)
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

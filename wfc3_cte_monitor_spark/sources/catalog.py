@@ -140,6 +140,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(sf_dir, name))
 
 
+def literal_table(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A small constant relation (bin specs, mapping and skip tables)
+    planned entirely in the JVM: one ``inline`` over a literal array of
+    structs on a one-row, one-partition range, cast to the ``ddl``
+    schema's types.
+
+    ``spark.createDataFrame(<python list>)`` would ship the rows through
+    a Python RDD (``parallelize`` + ``applySchemaToPythonRDD``), so every
+    scan of it starts Python worker tasks inside an otherwise pure-JVM
+    plan. An empty ``rows`` gives a typed empty relation."""
+    from pyspark.sql.types import DataType
+
+    fields = DataType.fromDDL(ddl).fields
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields]
+        )
+    structs = [
+        F.struct(*[
+            F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, fields, strict=True)
+        ])
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs)))
+
+
 def spread(df: DataFrame, key: str) -> DataFrame:
     """Hash-repartition a small-file table to the executor parallelism.
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import literal_table
+
 # (proposid, visit) pairs to drop — run_image_extraction.py:999-1008.
 DEFAULT_SKIP_VISITS = [("14012", "05"), ("12379", "07"), ("12379", "13")]
 
@@ -47,8 +49,9 @@ def apply_skip_lists(images: DataFrame, proposid_col: str = "proposid",
                      visit_col: str = "visit",
                      skip_visits: list[tuple[str, str]] | None = None) -> DataFrame:
     """Drop excluded (proposid, visit) pairs via a broadcast anti-join."""
-    spark = images.sparkSession
-    skips = spark.createDataFrame(
-        skip_visits or DEFAULT_SKIP_VISITS, schema=f"{proposid_col} string, {visit_col} string"
+    skips = literal_table(
+        images.sparkSession,
+        skip_visits or DEFAULT_SKIP_VISITS,
+        f"{proposid_col} string, {visit_col} string",
     )
     return images.join(F.broadcast(skips), [proposid_col, visit_col], "left_anti")

@@ -7,17 +7,29 @@ pipeline over every file and re-probes the DB row by row
 key-probe + INSERT loop — the documented "could take dayyys" path).
 The Spark-native answer: exposures arrive on a stream; each micro-batch
 
-1. derives the affected PAIR KEYS (the mode keys of the new exposures —
-   a pair's slopes depend only on its own two images' photometry);
-2. recomputes ``compute_results`` restricted to those pairs (a filter
-   on the pair key before the self-join, so the work per batch is
-   O(new pairs), not O(corpus));
-3. MERGEs the fresh wide rows into the Results store with the S7
-   insert-or-update semantics (``operators/upsert.upsert``).
+1. derives the TOUCHED PAIRS — every pair with a side among the new
+   exposures (a pair's slopes depend only on its own two images'
+   photometry) — keys them with ``pair_id`` and materializes them once
+   (``plans/pipeline.key_pairs``): the relation feeds the pair map, the
+   fit re-attach, the zero-fill frame and the merge's anti-join, so
+   without the truncation its corpus dedup + self-join subtree would be
+   re-planned per use;
+2. recomputes ``compute_results`` for exactly those pairs (``pairs=``):
+   the phot fan-in joins the touched pairs' images through the pair
+   map, so the work per batch is O(new pairs), not O(corpus);
+3. MERGEs: the store minus the touched ``(pair, aperture)`` keys (a
+   broadcast ``left_anti`` join — the store streams past a
+   pair-dimension-sized build side, no exchange of the store) ∪ the
+   fresh rows. The zero-fill gives every touched pair exactly one fresh
+   row per aperture, so this equals latest-wins insert-or-update on the
+   natural key without a store-wide ``row_number`` shuffle
+   (``operators/upsert`` keeps that general form for s07).
 
-This is exactly-once per batch under checkpointing (foreachBatch with a
-deterministic MERGE is idempotent: re-processing a batch rewrites the
-same rows with the same values).
+The merged plan lazily reads the store it replaces, so the stream step
+still materializes it eagerly before the overwrite (the
+read-then-overwrite barrier). This is exactly-once per batch under
+checkpointing (foreachBatch with a deterministic MERGE is idempotent:
+re-processing a batch rewrites the same rows with the same values).
 """
 
 from __future__ import annotations
@@ -26,8 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..checkpointing import materialize
-from ..operators.upsert import upsert
-from ..plans.pipeline import compute_results
+from ..plans.pipeline import compute_results, key_pairs
 
 PAIR_KEY_COLS = ["targname", "imagename_1", "imagename_2"]
 
@@ -77,20 +88,18 @@ def affected_pairs(new_fileinfo: DataFrame, all_fileinfo: DataFrame) -> DataFram
     """Pair keys whose inputs changed: every pair with at least one side
     among the new exposures. Computed by running the pair contract over
     the FULL fileinfo but semi-joined to the new images — at scale the
-    mode-key self-join is pruned by the (tiny) new-image set broadcast."""
+    mode-key self-join is pruned by the (tiny) new-image set broadcast.
+    A semi-join emits each pair at most once, so over a corpus with
+    unique imagenames the keys come out unique without a distinct."""
     from ..plans.pipeline import query_for_pair
 
     pairs = query_for_pair(all_fileinfo)
-    new_names = new_fileinfo.select(F.col("imagename").alias("_new")).distinct()
-    return (
-        pairs.join(
-            F.broadcast(new_names),
-            (pairs.imagename_1 == F.col("_new")) | (pairs.imagename_2 == F.col("_new")),
-            "leftsemi",
-        )
-        .select(*PAIR_KEY_COLS)
-        .distinct()
-    )
+    new_names = new_fileinfo.select(F.col("imagename").alias("_new"))
+    return pairs.join(
+        F.broadcast(new_names),
+        (pairs.imagename_1 == F.col("_new")) | (pairs.imagename_2 == F.col("_new")),
+        "leftsemi",
+    ).select(*PAIR_KEY_COLS)
 
 
 def incremental_results_batch(
@@ -101,29 +110,31 @@ def incremental_results_batch(
     aperture: int = 3,
 ) -> DataFrame:
     """One maintenance step: recompute the wide Results rows for the
-    affected pairs only and MERGE them into the store. ``results_store``
+    touched pairs only and MERGE them into the store. ``results_store``
     None (bootstrap: no store yet) skips the merge and returns the fresh
     rows — the touched-pair restriction is identical either way, so a
     pair whose two sides arrived in different batches is still formed
     (restricting to the BATCH's own images here would silently drop the
-    partner side)."""
-    touched = affected_pairs(new_fileinfo, all_fileinfo)
-    # restrict fileinfo to images belonging to touched pairs before the
-    # (quadratic-looking) pair self-join: per-batch work is bounded by
-    # the touched set, not the corpus
-    touched_images = touched.select(
-        F.col("imagename_1").alias("imagename")
-    ).unionByName(touched.select(F.col("imagename_2").alias("imagename"))).distinct()
-    fi = all_fileinfo.join(F.broadcast(touched_images), "imagename", "leftsemi")
-    fresh = compute_results(fi, phot_long, aperture=aperture)
+    partner side).
+
+    The touched pairs are keyed and materialized ONCE
+    (:func:`key_pairs`, which also runs the ``pair_id`` injectivity
+    guard when the session enables it) and drive both the recompute and
+    the merge. The merge drops the store's rows on the touched
+    ``(targname, imagename_1, imagename_2, aperture)`` keys with a
+    broadcast ``left_anti`` join and appends the fresh rows: the
+    zero-fill gives each touched pair exactly one fresh row per
+    aperture, so keying the anti-join on the touched pairs is exactly
+    the key set of the fresh rows, with no second materialization."""
+    touched = key_pairs(affected_pairs(new_fileinfo, all_fileinfo))
+    fresh = compute_results(all_fileinfo, phot_long, aperture=aperture, pairs=touched)
     if results_store is None:
         return fresh
-    return upsert(
-        results_store.withColumn("_v", F.lit(0)),
-        fresh.withColumn("_v", F.lit(1)),
-        keys=[*PAIR_KEY_COLS, "aperture"],
-        version_col="_v",
-    ).drop("_v")
+    keys = touched.select(*PAIR_KEY_COLS).withColumn("aperture", F.lit(float(aperture)))
+    kept = results_store.join(
+        F.broadcast(keys), [*PAIR_KEY_COLS, "aperture"], "left_anti"
+    ).select(*results_store.columns)  # a USING join moves its keys first
+    return kept.unionByName(fresh)
 
 
 def maintain_results_stream(
@@ -155,14 +166,14 @@ def maintain_results_stream(
         # overwrite the whole store with just this batch's pairs
         store = read_store_or_none(spark, store_path)
         corpus = _ingest_and_corpus(spark, batch_df, all_fileinfo, ingested_path)
-        fresh = incremental_results_batch(store, batch_df, corpus, phot_long, aperture)
+        merged = incremental_results_batch(store, batch_df, corpus, phot_long, aperture)
         # materialize BEFORE overwriting: the merged plan lazily reads the
         # store being replaced (read-then-overwrite-same-path corrupts
         # otherwise). A table format with real MERGE (or dynamic partition
         # overwrite on the store's partition key) removes both this copy
         # and the full rewrite at scale.
-        fresh = fresh.transform(materialize, eager=True)
-        fresh.write.mode("overwrite").parquet(store_path)
+        merged = merged.transform(materialize, eager=True)
+        merged.write.mode("overwrite").parquet(store_path)
 
     return (
         fileinfo_stream.writeStream.foreachBatch(step)
