@@ -1,15 +1,17 @@
-"""Focused tests for the r13 EXACT-COLLAPSE-FIRST optimizations.
+"""Focused tests for the EXACT-COLLAPSE-FIRST plans.
 
 The sf10 scale ladder showed that byte-identical content (100-clone
 groups under pure corpus duplication) makes every signature-bucket
 self-join quadratic in clone-group size — e02's near-dup join spilled
-past the free disk and died. The remedy collapses exact-duplicate
-groups BEFORE the fuzzy stage and expands membership afterwards, in
-three places: ``functions.similarity.neardup_pairs`` (e02),
-``plans.dedup_queries.d02_lsh_dedup_pipeline`` (verify stage), and
-d03's fuzzy arm. The collapse must be OUTPUT-INVISIBLE; these tests
-exercise it on corpora with real clone clusters, which the shipped
-test data mostly lacks (sf0.01 has zero duplicate texts/vectors).
+past the free disk and died. The remedy groups exact duplicates
+(``functions.dedup.dup_groups``) BEFORE the fuzzy stage and expands each
+group's member-id array afterwards, in ``functions.similarity.
+neardup_pairs`` (e02), d02's verify stage and d03's document and fuzzy
+arms. It is the only plan these queries have, so it must be
+OUTPUT-INVISIBLE on any corpus: these tests exercise it on corpora with
+real clone clusters, which the shipped test data mostly lacks (sf0.01
+has zero duplicate texts/vectors); tests/test_oracle_parity.py covers
+the duplicate-free corpora.
 """
 
 from __future__ import annotations
@@ -94,9 +96,10 @@ def clone_dir(tmp_path_factory) -> str:
 def test_collapsed_queries_match_oracle_on_clone_corpus(spark, clone_dir, name):
     # The driver's own gate machinery (row count + schema + value
     # comparison vs the DuckDB oracle) over a corpus WITH exact-dup
-    # clusters: the collapse's inter-group expansion, intra-group pair
-    # synthesis and nu/label/rep expansions all carry real weight here.
-    # d01 rides along as the unchanged control on the same data.
+    # clusters: the cross-group expansion, the self-candidates' intra
+    # pairs (and their guards, via the short-doc clone group) and the
+    # per-doc explode(ids) expansions all carry real weight here. d01
+    # rides along as the control on the same data.
     from wfc3_cte_monitor_spark.testing.oracle import compare_query
 
     res = compare_query(spark, name, clone_dir)
@@ -104,53 +107,31 @@ def test_collapsed_queries_match_oracle_on_clone_corpus(spark, clone_dir, name):
     assert res.spark_rows > 0
 
 
-_ADAPTIVE = ("d02_lsh_dedup_pipeline", "d03_minhash_lsh", "e02_ann_neardup")
+def test_dup_groups_splits_fingerprint_collisions_by_length(spark, monkeypatch):
+    # A fingerprint128 collision must also match the content's length
+    # (length for strings, size for arrays) before dup_groups merges two
+    # contents: with the fingerprint pinned to a constant, every content
+    # collides, and only the length keeps different contents apart.
+    from pyspark.sql import functions as F
 
-
-@pytest.mark.parametrize("name", _ADAPTIVE)
-def test_direct_branch_matches_oracle_on_clone_corpus(spark, clone_dir, name):
-    # r14 duplication-adaptive collapse: the DIRECT (pre-collapse)
-    # branch must stay correct on clone-heavy data too — it is the
-    # plan the probe would never pick there, but both branches carry
-    # the full semantics and forcing it proves branch equivalence on
-    # the data where the branches actually diverge in shape.
     from wfc3_cte_monitor_spark.functions import dedup as fd
-    from wfc3_cte_monitor_spark.testing.oracle import compare_query
 
-    old = fd.FORCE_COLLAPSE
-    fd.FORCE_COLLAPSE = False
-    try:
-        res = compare_query(spark, name, clone_dir)
-    finally:
-        fd.FORCE_COLLAPSE = old
-    assert res.ok, str(res)
-    assert res.spark_rows > 0
+    monkeypatch.setattr(fd, "fingerprint128", lambda c: (F.lit(0), F.lit(0)))
 
+    def groups(rows, schema):
+        df = spark.createDataFrame(rows, schema)
+        return sorted(sorted(r.ids) for r in fd.dup_groups(df, "id", "c").collect())
 
-@pytest.mark.parametrize("name", _ADAPTIVE)
-def test_collapsed_branch_matches_oracle_on_unique_corpus(spark, name):
-    # ... and the COLLAPSED branch must stay correct on duplicate-free
-    # data (identity groups: every expansion degenerates to a no-op).
-    from wfc3_cte_monitor_spark.functions import dedup as fd
-    from wfc3_cte_monitor_spark.testing.oracle import compare_query
-
-    old = fd.FORCE_COLLAPSE
-    fd.FORCE_COLLAPSE = True
-    try:
-        res = compare_query(spark, name, "/root/testdata/sf0.001")
-    finally:
-        fd.FORCE_COLLAPSE = old
-    assert res.ok, str(res)
-    assert res.spark_rows > 0
+    texts = [(1, "ab"), (2, "abc"), (3, "xyz"), (4, "abcd"), (5, "ab")]
+    assert groups(texts, "id long, c string") == [[1, 5], [2, 3], [4]]
+    vecs = [(1, [1.0]), (2, [1.0, 2.0]), (3, [3.0, 4.0]), (4, [1.0, 2.0, 3.0])]
+    assert groups(vecs, "id long, c array<double>") == [[1], [2, 3], [4]]
 
 
-def test_neardup_pairs_clone_clusters_match_numpy(spark):
-    # Pure-function check of the collapsed neardup_pairs against an
-    # independent numpy recomputation (LSH candidate pairs ∩ cosine >=
-    # tau) on a synthetic corpus that is MOSTLY clones: 12 base vectors
-    # x 4 byte-identical copies with interleaved ids. Every output pair
-    # class is present: intra-group (identical vectors), inter-group
-    # expanded, and rep-rep pairs between singleton groups.
+def _assert_neardup_pairs_match_numpy(spark, ids, vecs, tau) -> dict:
+    """neardup_pairs on (ids, vecs) against an independent numpy
+    recomputation: LSH candidate pairs ∩ cosine >= tau. A NaN cosine
+    (zero vector) never passes the threshold. Returns the pairs."""
     from wfc3_cte_monitor_spark.functions.similarity import (
         ND_PLANES,
         ND_TABLES,
@@ -159,20 +140,11 @@ def test_neardup_pairs_clone_clusters_match_numpy(spark):
         neardup_pairs,
     )
 
-    rng = np.random.default_rng(4242)
-    base = rng.standard_normal((12, 64)).astype(np.float64)
-    # round so float32->float64 widening is exact in both paths
-    base = np.round(base, 3)
-    ids, vecs = [], []
-    for i in range(12):
-        for rep, off in enumerate((0, 100, 200, 300)):
-            ids.append(i + off if rep else i)
-            vecs.append(base[i])
     df = spark.createDataFrame(
         [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)],
         "vec_id long, embedding array<double>",
     )
-    got = {(r.id_a, r.id_b): r.sim for r in neardup_pairs(df, 0.30).collect()}
+    got = {(r.id_a, r.id_b): r.sim for r in neardup_pairs(df, tau).collect()}
 
     V = np.array(vecs)
     order = np.argsort(ids)
@@ -191,14 +163,57 @@ def test_neardup_pairs_clone_clusters_match_numpy(spark):
                 for y in range(x + 1, len(members)):
                     i, j = members[x], members[y]
                     cand.add((min(ids_s[i], ids_s[j]), max(ids_s[i], ids_s[j])))
-    Vn = Vs / np.linalg.norm(Vs, axis=1, keepdims=True)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        Vn = Vs / np.linalg.norm(Vs, axis=1, keepdims=True)
     C = Vn @ Vn.T
     idx_of = {v: i for i, v in enumerate(ids_s)}
     want = {}
     for (a, b) in cand:
         sim = float(np.round(C[idx_of[a], idx_of[b]] * 1e6) / 1e6)
-        if sim >= 0.30:
+        if sim >= tau:
             want[(a, b)] = sim
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 2e-6, (k, got[k], want[k])
+    return got
+
+
+def _base_vectors(n: int, seed: int) -> np.ndarray:
+    # round so float32->float64 widening is exact in both paths
+    return np.round(np.random.default_rng(seed).standard_normal((n, 64)), 3)
+
+
+def test_neardup_pairs_clone_clusters_match_numpy(spark):
+    # Pure-function check of neardup_pairs against numpy on a synthetic
+    # corpus that is MOSTLY clones: 12 base vectors x 4 byte-identical
+    # copies with interleaved ids. Every output pair class is present:
+    # intra-group (identical vectors), inter-group expanded, and pairs
+    # between singleton groups.
+    base = _base_vectors(12, 4242)
+    ids, vecs = [], []
+    for i in range(12):
+        for rep, off in enumerate((0, 100, 200, 300)):
+            ids.append(i + off if rep else i)
+            vecs.append(base[i])
+    _assert_neardup_pairs_match_numpy(spark, ids, vecs, 0.30)
+
+
+@pytest.mark.parametrize("corpus", ["hot_key", "zero_vectors"])
+def test_neardup_pairs_adversarial_corpora_match_numpy(spark, corpus):
+    # hot_key: one 40-clone group (all-duplicate content on one key)
+    # plus 8 singletons; every intra pair must come out, once each.
+    # zero_vectors: a 3-clone group of zero vectors among the same 8
+    # singletons; its cosine is NaN (0/0), so no pair touching it may
+    # be emitted, intra-group pairs included.
+    base = _base_vectors(9, 777)
+    clone = base[0] if corpus == "hot_key" else np.zeros(64)
+    k = 40 if corpus == "hot_key" else 3
+    ids = [1000 + 7 * j for j in range(k)] + list(range(1, 9))
+    vecs = [clone] * k + [base[i] for i in range(1, 9)]
+    got = _assert_neardup_pairs_match_numpy(spark, ids, vecs, 0.30)
+    clone_ids = set(ids[:k])
+    intra = {p for p in got if p[0] in clone_ids and p[1] in clone_ids}
+    if corpus == "hot_key":
+        assert len(intra) == k * (k - 1) // 2
+    else:
+        assert not any(p[0] in clone_ids or p[1] in clone_ids for p in got)

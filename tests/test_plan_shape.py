@@ -130,6 +130,21 @@ def test_ivf_assign_is_single_pass(spark):
     assert len(evals) == 1, evals
 
 
+def test_neardup_cosine_evaluated_once(spark):
+    # the near-dup verify must run the cosine UDF once per candidate
+    # pair: a `sim >= tau` filter pushed below the projection re-inlines
+    # the call and plans a second ArrowEvalPython over the same pairs
+    from wfc3_cte_monitor_spark.functions.similarity import neardup_pairs
+    from wfc3_cte_monitor_spark.sources.catalog import load_table
+
+    df = neardup_pairs(load_table(spark, SF, "embeddings"), 0.9)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    evals = re.findall(r"\(\d+\) ArrowEvalPython", plan)
+    assert len(evals) == 1, evals
+
+
 def test_d05_sample_is_bounded_topk(spark):
     # the audit sample must plan as TakeOrdered (bounded top-k scan of
     # the corpus), never a global Sort feeding a Limit — the fixed-count

@@ -22,7 +22,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
+from ..checkpointing import materialize
 from .text import portable_hash64, portable_hash64_sql
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, prime
@@ -48,7 +50,7 @@ def fingerprint128(col: str | Column) -> tuple[Column, Column]:
     inherited the hot key it exists to remove. Grouping on this
     fingerprint instead lets ``groupBy(fp).agg(min(id), min_by(...))``
     partially aggregate map-side (one row per distinct content per map
-    partition crosses the wire) and keeps membership joins on bigints.
+    partition crosses the wire); :func:`dup_groups` is that aggregate.
 
     128 bits, not 64: at 100 TB corpus sizes (~5e10 documents) a single
     64-bit hash collides by the birthday bound (expected at ~2^32
@@ -61,7 +63,9 @@ def fingerprint128(col: str | Column) -> tuple[Column, Column]:
     by the pair is grouping by content. Adversarially chosen input
     (xxhash64 is not collision-resistant) can collide both halves, and
     a collision silently merges distinct contents; nothing here detects
-    it. xxhash64 handles strings and arrays alike
+    it. :func:`dup_groups` adds the content length to the group key,
+    so a collision must also match length to merge two contents.
+    xxhash64 handles strings and arrays alike
     (arrays hash element-wise), which covers text, names and embedding
     vectors with one definition.
     """
@@ -69,73 +73,80 @@ def fingerprint128(col: str | Column) -> tuple[Column, Column]:
     return F.xxhash64(c), F.xxhash64(F.lit(_FP_SEED2), c)
 
 
-# Test hook for the duplication-adaptive collapse decision below:
-# None = decide from the data; True/False = force the branch. Both
-# branches of every call site compute identical results on any input
-# (the collapse is purely a performance choice), so forcing is safe —
-# tests use it to run each branch on the other branch's natural data.
-FORCE_COLLAPSE: bool | None = None
+def dup_groups(df: DataFrame, id_col: str, content_col: str,
+               *extra_aggs: Column) -> DataFrame:
+    """Exact-duplicate groups of ``content_col``: one row per distinct
+    content, ``(gid = min id, <content_col>, ids = member ids, *extra)``,
+    lazily materialized once.
 
+    The shared substrate of every EXACT-COLLAPSE-FIRST plan (d02, d03,
+    e02): byte-identical contents produce identical shingles,
+    signatures, bands and vectors, so the fuzzy stage runs once per
+    distinct content and the group's ``ids`` array carries it back to
+    member level row-locally — per-id arms ``explode(ids)``, pair arms
+    :func:`expand_group_pairs` — with no membership relation and no
+    join-back. On a duplicate-free corpus every group is a singleton
+    and each expansion is a one-element explode.
 
-# Break-even thresholds for has_dup_groups (first-principles, guide
-# §1.2): the collapse's machinery costs ~2 extra corpus-linear passes
-# (fingerprint group agg + membership join) plus a fixed set of small
-# expansion joins, so it pays when EITHER
-#   (a) the candidate inflation it removes is itself at least a
-#       corpus-pass worth of rows: Σ_g C(k_g, 2) ≥ n/4 (each surviving
-#       clone pair re-enters every band/bucket self-join, ×L ≈ 4
-#       tables/bands, hence the /4), or
-#   (b) the substrate it avoids recomputing shrinks materially:
-#       duplicate rows (n − groups) ≥ n/4.
-# Mega-clone corpora (the sf10 ladder's 100-clone groups, a real
-# crawl's boilerplate clusters) trip (a) by orders of magnitude; a
-# trace level of duplication (sf0.1 ships 8 duplicate pairs in 5000
-# docs) trips neither and keeps the cheap direct plan.
-COLLAPSE_PAIRS_FRACTION = 0.25
-COLLAPSE_DUP_FRACTION = 0.25
-
-
-def has_dup_groups(df: DataFrame, content_col: str) -> bool:
-    """True iff byte-identical ``content_col`` duplication in ``df`` is
-    heavy enough that the exact-collapse rewrite pays — the
-    DUPLICATION-ADAPTIVE collapse decision (r14). The
-    exact-collapse-first rewrite (d02/d03/e02) is what lets the
-    fuzzy-dedup self-joins survive clone-heavy corpora, but on a
-    (nearly) duplicate-free corpus its group/membership machinery is
-    pure fixed overhead; this probe picks the cheaper plan per run — a
-    stats-driven plan choice, the same move AQE makes one level down.
-    BOTH plans are semantically complete, so the decision can only
-    affect speed, never results. Cost: one fingerprint aggregate over
-    BIGINTS (no payload on the exchange, map-side combinable — the
-    fingerprint pass is the collapse's own first step), executed when
-    the plan is built, recomputed from the parquet input on every run,
-    never cached across runs."""
-    if FORCE_COLLAPSE is not None:
-        return FORCE_COLLAPSE
-    f1, f2 = fingerprint128(content_col)
-    # ONE job: per-group partial counts map-side, then a 1-row reduce —
-    # deliberately not where(c >= 2).take(1), whose CollectLimit runs
-    # incremental partial jobs over the agg (measured 0.5-1.5 s of
-    # build wall at sf0.1 vs ~0.2 s for this form). The pair sum runs
-    # in doubles: exact near the threshold (tiny counts), and a
-    # mega-group far past it cannot be mis-ranked by fp error.
-    c = F.col("_c")
-    row = (
-        df.select(f1.alias("_f1"), f2.alias("_f2"))
-        .groupBy("_f1", "_f2")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .agg(
-            F.sum(c).alias("_n"),
-            F.count(F.lit(1)).alias("_g"),
-            F.sum(c.cast("double") * (c - 1) / 2.0).alias("_sp"),
+    The group key is :func:`fingerprint128` plus the content's length
+    (``length`` for strings, ``size`` for arrays), so a fingerprint
+    collision must also match length before it merges two contents.
+    ``groupBy`` on that key partially aggregates map-side: one row per
+    distinct content per map partition crosses the wire, never a
+    mega-clone group's payloads. ``extra_aggs`` are further aggregate
+    columns over the members (e.g. "does the group hold a plant id")."""
+    c = F.col(content_col)
+    is_array = isinstance(df.schema[content_col].dataType, ArrayType)
+    f1, f2 = fingerprint128(c)
+    return (
+        df.groupBy(
+            f1.alias("_f1"), f2.alias("_f2"),
+            (F.size(c) if is_array else F.length(c)).alias("_len"),
         )
-        .first()
+        .agg(
+            F.min(id_col).alias("gid"),
+            F.min_by(content_col, id_col).alias(content_col),
+            F.collect_list(id_col).alias("ids"),
+            *extra_aggs,
+        )
+        .drop("_f1", "_f2", "_len")
+        .transform(materialize)
     )
-    if not row or row["_n"] is None or row["_n"] == 0:
-        return False
-    n, g, sp = row["_n"], row["_g"], row["_sp"]
-    return (sp >= COLLAPSE_PAIRS_FRACTION * n) or (
-        (n - g) >= COLLAPSE_DUP_FRACTION * n
+
+
+def self_candidates(groups: DataFrame, guard: Column | None = None) -> DataFrame:
+    """``(ga, gb) = (gid, gid)`` for each multi-member group of
+    :func:`dup_groups` output that passes ``guard``: the group's
+    intra-group pairs as one group-level candidate. ``guard`` is the
+    arm's condition for clones to be candidates of each other at all
+    (e.g. "the text yields at least one shingle band")."""
+    keep = F.size("ids") > 1
+    return groups.where(keep if guard is None else keep & guard).select(
+        F.col("gid").alias("ga"), F.col("gid").alias("gb")
+    )
+
+
+def expand_group_pairs(pairs: DataFrame, *keep: str) -> DataFrame:
+    """Group pairs ``(ga, gb, ia, ib, *keep)`` → member pairs
+    ``(id_a < id_b, *keep)``, row-locally.
+
+    ``ia``/``ib`` are the two groups' member-id arrays (see
+    :func:`dup_groups`). A group pair with ``ga == gb`` is the group's
+    self-candidate and yields its intra-group pairs; any other pair
+    yields the cross product. Group id ranges interleave, so
+    least/greatest on the member ids (not the gid order) restores
+    ``id_a < id_b``, and since each id sits in exactly one group no
+    pair is emitted twice. The pair metric in ``keep`` was computed
+    once per group pair and rides along."""
+    return (
+        pairs.select("ga", "gb", F.explode("ia").alias("_xa"), "ib", *keep)
+        .select("ga", "gb", "_xa", F.explode("ib").alias("_xb"), *keep)
+        .where((F.col("ga") != F.col("gb")) | (F.col("_xa") < F.col("_xb")))
+        .select(
+            F.least("_xa", "_xb").alias("id_a"),
+            F.greatest("_xa", "_xb").alias("id_b"),
+            *keep,
+        )
     )
 
 
@@ -300,8 +311,7 @@ def duplicated_spans(docs: DataFrame, id_col: str = "doc_id",
     """
     from pyspark.sql import Window
 
-    from ..checkpointing import materialize
-    from .text import portable_hash64, tokens
+    from .text import tokens
 
     tok = docs.select(id_col, tokens(text_col).alias("t")).where(F.size("t") >= k)
     ex = tok.select(id_col, F.size("t").alias("nt"), F.posexplode("t").alias("p0", "tok"))

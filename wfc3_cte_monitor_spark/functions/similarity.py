@@ -208,130 +208,64 @@ def neardup_pairs(embeddings: DataFrame, tau: float, id_col: str = "vec_id",
     k byte-identical vectors share EVERY bucket of every table, so a
     100-clone group contributes C(100,2)·L rows to the join output
     before the pair dedup (at sf10 this spilled past 80 GB of disk and
-    killed the session; SCALING.md §sf10 ladder). Remedy: group
-    byte-identical vectors first (one linear, co-partitioned shuffle
-    keyed by the vector), run the ENTIRE index → self-join → cosine
-    pipeline at unique-content granularity, and expand membership
-    afterwards. Provably output-identical: identical vectors get
-    identical bucket arrays (deterministic function of v), so the
-    doc-level candidate set is exactly {expanded rep-level candidates}
-    ∪ {intra-group pairs} (clones always share all buckets), and sim is
-    a deterministic function of the vector pair, which the expansion
-    preserves. The quadratic work that remains — emitting the
-    intra-group pairs themselves — is output-sized, not join-inflated
-    by the L-table index.
+    killed the session; SCALING.md §sf10 ladder). So the ENTIRE index →
+    self-join → cosine pipeline runs once per distinct vector
+    (functions/dedup.dup_groups) and expands through each group's
+    member-id array. Output-identical: identical vectors get identical
+    bucket arrays, so the member-level candidate set is exactly the
+    expanded group-level candidates plus every intra-group pair (clones
+    share all buckets) — the latter enter as one self-candidate
+    (gid, gid) per multi-member group — and sim is a deterministic
+    function of the vector pair, computed once per group pair. The
+    quadratic work that remains — emitting the intra-group pairs
+    themselves — is output-sized, not join-inflated by the L-table
+    index.
 
     The remaining quadratic work is confined to buckets of DISTINCT
     vectors (n_unique/256 expected occupancy per table), so the plan
     survives a 100 TB corpus; at scale the index is written bucketed by
-    (table_id, bucket) so the self-join is co-located, shuffle-free.
-
-    RE-KEYED on a 128-bit content fingerprint (r13 verdict ask #1): the
-    r13 form (min(vec_id) OVER (PARTITION BY v)) shuffled the full
-    array<double> payload with no map-side combine, so a mega-clone
-    group landed on ONE reducer holding every clone's vector — the
-    collapse's own shuffle inherited the hot key it exists to remove.
-    groupBy(fingerprint) + min/min_by partially aggregates map-side
-    (one row per distinct vector per map partition crosses the wire)
-    and the membership join-back moves bigints only. See
-    functions/dedup.fingerprint128 for the collision argument.
-
-    DUPLICATION-ADAPTIVE (r14): the collapse engages only when the
-    corpus actually contains byte-identical vector groups
-    (functions/dedup.has_dup_groups — one bigint fingerprint aggregate
-    at plan build); on a duplicate-free corpus the pre-collapse plan
-    runs (membership would be the identity and the group/expansion
-    machinery pure fixed overhead). Both branches compute identical
-    results on any input."""
-    from .dedup import fingerprint128, has_dup_groups
+    (table_id, bucket) so the self-join is co-located, shuffle-free."""
+    from .dedup import dup_groups, expand_group_pairs, self_candidates
 
     src = embeddings.select(F.col(id_col).alias("vec_id"),
                             F.col(emb_col).cast("array<double>").alias("v"))
-    collapsed = has_dup_groups(src.select("v"), "v")
-    if collapsed:
-        f1, f2 = fingerprint128("v")
-        sfp = src.select("vec_id", "v", f1.alias("_f1"), f2.alias("_f2"))
-        # groups: one row per distinct vector, gid = min member id;
-        # materialized because the index, both verify vector fetches
-        # and the intra gsim pass all read the reps projection.
-        groups = (
-            sfp.groupBy("_f1", "_f2")
-            .agg(F.min("vec_id").alias("gid"), F.min_by("v", "vec_id").alias("v"))
-            .transform(materialize)
-        )
-        reps = groups.select(F.col("gid").alias("vec_id"), "v")
-        # membership (vec_id → gid): a narrow bigint join, materialized
-        # — four downstream consumers (two inter-expansion sides, the
-        # intra self-join's two sides). Vectors never ride it.
-        members = (
-            sfp.select("vec_id", "_f1", "_f2")
-            .join(groups.select("_f1", "_f2", "gid"), ["_f1", "_f2"])
-            .select("vec_id", "gid")
-            .transform(materialize)
-        )
-    else:
-        # duplicate-free corpus: every vector is its own group
-        reps = src
-
-    idx = lsh_index(reps, "vec_id", "v", dim,
+    groups = dup_groups(src, "vec_id", "v")
+    idx = lsh_index(groups, "gid", "v", dim,
                     n_tables=ND_TABLES, n_planes=ND_PLANES, seed=_ND_SEED)
     # the index feeds both sides of the bucket self-join — materialize the
     # pruned (id, table, bucket) layout once (lazily) so the Arrow bucket
     # pass isn't embedded twice in the plan; vectors are dropped first so
     # nothing wider than the key rides the checkpoint
     idx = idx.select("vec_id", "table_id", "bucket").transform(materialize)
-    a = idx.select(F.col("vec_id").alias("id_a"), "table_id", "bucket")
-    b = idx.select(F.col("vec_id").alias("id_b"), "table_id", "bucket")
-    # Dedup on bare (id_a, id_b) BEFORE fetching vectors: the multi-table
+    a = idx.select(F.col("vec_id").alias("ga"), "table_id", "bucket")
+    b = idx.select(F.col("vec_id").alias("gb"), "table_id", "bucket")
+    # Dedup on bare (ga, gb) BEFORE fetching vectors: the multi-table
     # collision dedup shuffle then moves 16-byte pairs, not 512-byte
-    # embeddings; vectors re-attach via id equi-joins (co-located by id
-    # at scale) and exact cosine runs once per surviving pair.
+    # embeddings; vectors and member ids re-attach via gid equi-joins
+    # (co-located by id at scale) and exact cosine runs once per
+    # surviving group pair.
     cands = (
         a.join(b, ["table_id", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+        .where(F.col("ga") < F.col("gb"))
+        .select("ga", "gb")
+        .dropDuplicates(["ga", "gb"])
+        .unionByName(self_candidates(groups))
     )
-    va = reps.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
-    vb = reps.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
-    cos = cosine_pd()
+    va = groups.select(F.col("gid").alias("ga"), F.col("v").alias("va"),
+                       F.col("ids").alias("ia"))
+    vb = groups.select(F.col("gid").alias("gb"), F.col("v").alias("vb"),
+                       F.col("ids").alias("ib"))
+    # nondeterministic so the optimizer keeps `sim >= tau` above the
+    # projection: pushed below it, the filter re-inlines the UDF call
+    # and every candidate pair pays the cosine twice
+    cos = cosine_pd().asNondeterministic()
     gpairs = (
-        cands.join(va, "id_a").join(vb, "id_b")
-        .select("id_a", "id_b", F.round(cos(F.col("va"), F.col("vb")), 6).alias("sim"))
+        cands.join(va, "ga").join(vb, "gb")
+        .select("ga", "gb", "ia", "ib",
+                F.round(cos(F.col("va"), F.col("vb")), 6).alias("sim"))
         .where(F.col("sim") >= tau)
     )
-    if not collapsed:
-        # identity membership: the rep-level pairs ARE the output
-        return gpairs
-    # INTER-group expansion: every member pair across two near-dup rep
-    # groups, re-ordered on the ORIGINAL ids (group id ranges interleave,
-    # so least/greatest — not the gid order — restores id_a < id_b). Each
-    # doc belongs to exactly one group, so no pair is emitted twice.
-    inter = (
-        gpairs
-        .join(members.select(F.col("gid").alias("id_a"),
-                             F.col("vec_id").alias("ia")), "id_a")
-        .join(members.select(F.col("gid").alias("id_b"),
-                             F.col("vec_id").alias("ib")), "id_b")
-        .select(F.least("ia", "ib").alias("id_a"),
-                F.greatest("ia", "ib").alias("id_b"), "sim")
-    )
-    # INTRA-group pairs: clones share every bucket, so every intra-group
-    # pair was a candidate in the un-collapsed plan; its sim is
-    # cosine(v, v) — computed ONCE per group with the same kernel the
-    # pair path uses (one linear Arrow pass over reps), then attached to
-    # the C(k,2) member pairs, which are output-sized by definition.
-    gsim = reps.select(
-        F.col("vec_id").alias("gid"),
-        F.round(cos(F.col("v"), F.col("v")), 6).alias("sim"),
-    ).where(F.col("sim") >= tau)
-    intra = (
-        members.select("gid", F.col("vec_id").alias("id_a"))
-        .join(members.select("gid", F.col("vec_id").alias("id_b")), "gid")
-        .where(F.col("id_a") < F.col("id_b"))
-        .join(gsim, "gid")
-        .select("id_a", "id_b", "sim")
-    )
-    return inter.unionByName(intra)
+    return expand_group_pairs(gpairs, "sim")
 
 
 def neardup_pairs_sql(source: str, tau: float, id_col: str = "vec_id",

@@ -8,13 +8,14 @@ from pyspark.sql import functions as F
 
 from ..checkpointing import materialize
 from ..functions.dedup import (
+    dup_groups,
     duplicated_spans,
-    fingerprint128,
-    has_dup_groups,
+    expand_group_pairs,
     lsh_bands,
     lsh_bands_sql,
     minhash_signature,
     minhash_signature_sql,
+    self_candidates,
     simhash16_sql,
 )
 from ..functions.text import (
@@ -358,146 +359,54 @@ def d02_lsh_dedup_pipeline(spark, sf_dir):
     # sets, so the band self-join inflates every k-clone group into
     # C(k,2)×n_bands candidate rows and the verify stage recomputes
     # Jaccard(t, t) = 1 for each of them. Group byte-identical texts
-    # first, run shingle → minhash → band → verify at UNIQUE-CONTENT
-    # granularity, and expand afterwards: doc-level verified edges =
-    # expanded group pairs ∪ intra-group all-pairs (identical token
-    # sets verify at exactly 1.0 ≥ 0.8 by construction —
-    # size(t)/(2·size(t) − size(t)) — so no Jaccard is computed for
-    # them). Everything downstream (CC, election, the incremental
-    # decision store) is unchanged and stays doc-keyed; the output is
-    # provably identical.
-    #
-    # RE-KEYED on a 128-bit content fingerprint (r13 verdict ask #1):
-    # the r13 form (min(doc_id) OVER (PARTITION BY text)) shuffled the
-    # full text with no map-side combine — a mega-clone group landed on
-    # ONE reducer holding every clone's payload. groupBy(fingerprint)
-    # partially aggregates map-side: the exchange moves one
-    # (fp, gid, text) row per distinct content per map partition, and
-    # the membership join-back moves bigints only. See
-    # functions/dedup.fingerprint128 for the collision argument.
-    #
-    # DUPLICATION-ADAPTIVE (r13 verdict ask #3 — the driver measured
-    # the unconditional collapse at −17% on the duplicate-free sf0.1
-    # corpus): the collapse engages only when the corpus actually
-    # contains exact-duplicate texts; otherwise the pre-collapse doc-
-    # granularity plan runs (membership would be the identity). Both
-    # branches compute identical results on any input — the probe
-    # (functions/dedup.has_dup_groups, one bigint aggregate at plan
-    # build) only picks the cheaper plan. It reads the RAW scan, not
-    # the spread() relation: spread's repartition would put a full
-    # text exchange inside the probe for nothing (the duplication
-    # structure is partitioning-invariant).
-    collapsed = has_dup_groups(
-        load_table(spark, sf_dir, "documents").select("text"), "text"
-    )
-    if collapsed:
-        f1, f2 = fingerprint128("text")
-        dfp = docs.select("doc_id", "text", f1.alias("_f1"), f2.alias("_f2"))
-        groups = (
-            dfp.groupBy("_f1", "_f2")
-            .agg(
-                F.min("doc_id").alias("gid"),
-                F.min_by("text", "doc_id").alias("text"),
-            )
-            .transform(materialize)
-        )
-        ureps = groups.select(F.col("gid").alias("doc_id"), "text")
-        # membership (doc_id → gid) + the shingle-existence flag the
-        # intra expansion needs (see the guard comment below), carried
-        # from the group relation through this one narrow join: bigints
-        # and a boolean ride the exchange, never the text. Materialized
-        # — five downstream consumers (two inter-expansion sides, the
-        # intra self-join's two sides, nu expansion).
-        members = (
-            dfp.select("doc_id", "_f1", "_f2")
-            .join(
-                groups.select(
-                    "_f1", "_f2", "gid",
-                    (F.size(tokens("text")) >= K_SHINGLE).alias("banded"),
-                ),
-                ["_f1", "_f2"],
-            )
-            .select("doc_id", "gid", "banded")
-            .transform(materialize)
-        )
-    else:
-        # duplicate-free corpus: every doc is its own group — run the
-        # signature pipeline at doc granularity, no membership relation
-        ureps = docs.select("doc_id", "text")
-        members = None
-    sh = exploded_shingles(ureps, "doc_id", "text", K_SHINGLE)
-    sig = minhash_signature_pairs(sh, "doc_id")
+    # first (functions/dedup.dup_groups: map-side-combined fingerprint
+    # groupBy, each group carrying its member ids), run shingle →
+    # minhash → band → verify once per distinct text, and expand the
+    # verified group pairs through the id arrays row-locally. A clone
+    # group's intra pairs enter as its self-candidate (gid, gid) and
+    # verify at Jaccard 1.0. Everything downstream (CC, election, the
+    # incremental decision store) is unchanged and stays doc-keyed; the
+    # output is identical on any corpus.
+    groups = dup_groups(docs.select("doc_id", "text"), "doc_id", "text")
+    sh = exploded_shingles(groups, "gid", "text", K_SHINGLE)
+    sig = minhash_signature_pairs(sh, "gid")
     from ..functions.dedup import lsh_bands
 
     # The band table feeds BOTH sides of the candidate self-join; without
     # a materialization the whole shingle→minhash pipeline (the query's
     # most expensive compute) is embedded twice in the plan. Same for the
     # token-set table below, joined once per pair side. Both are
-    # doc-dimension relations — lazy checkpoints (no blocking barrier),
+    # group-dimension relations — lazy checkpoints (no blocking barrier),
     # standard diamond-reuse hygiene for an iterative pipeline.
-    bands = lsh_bands(sig, "doc_id").transform(materialize)
-    cands = candidate_pairs(bands, "doc_id")
+    bands = lsh_bands(sig, "gid").transform(materialize)
+    # Intra pairs are candidates ONLY when the group's text yields at
+    # least one shingle band (raw token count >= K_SHINGLE:
+    # exploded_shingles emits a k-gram iff lead(k-1) exists) — a
+    # <k-token clone group has no signature, no bands, and therefore NO
+    # edge in the band-candidate semantics the oracle mirrors. The guard
+    # reads raw tokens(), not the distinct set in toks: 'a a a' has 3
+    # raw tokens -> one shingle, but |distinct| = 1.
+    cands = (
+        candidate_pairs(bands, "gid")
+        .select(F.col("id_a").alias("ga"), F.col("id_b").alias("gb"))
+        .unionByName(self_candidates(groups, F.size(tokens("text")) >= K_SHINGLE))
+    )
 
-    toks = ureps.select(
-        "doc_id", F.array_sort(F.array_distinct(tokens("text"))).alias("t")
+    toks = groups.select(
+        "gid", F.array_sort(F.array_distinct(tokens("text"))).alias("t"), "ids"
     ).transform(materialize)
-    ta = toks.select(F.col("doc_id").alias("id_a"), F.col("t").alias("ta"))
-    tb = toks.select(F.col("doc_id").alias("id_b"), F.col("t").alias("tb"))
-    joined = cands.join(ta, "id_a").join(tb, "id_b").withColumn(
+    ta = toks.select(F.col("gid").alias("ga"), F.col("t").alias("ta"), F.col("ids").alias("ia"))
+    tb = toks.select(F.col("gid").alias("gb"), F.col("t").alias("tb"), F.col("ids").alias("ib"))
+    joined = cands.join(ta, "ga").join(tb, "gb").withColumn(
         "_inter", F.size(F.array_intersect("ta", "tb"))
     )
     jac = F.col("_inter").cast("double") / (F.size("ta") + F.size("tb") - F.col("_inter"))
-    gverified = joined.where(jac >= JACCARD_THRESHOLD).select("id_a", "id_b")
-    if collapsed:
-        # Expansion back to doc granularity. Group id ranges interleave,
-        # so least/greatest on the ORIGINAL ids restores id_a < id_b;
-        # each doc belongs to exactly one group, so no pair is emitted
-        # twice.
-        inter = (
-            gverified
-            .join(members.select(F.col("gid").alias("id_a"),
-                                 F.col("doc_id").alias("ia")), "id_a")
-            .join(members.select(F.col("gid").alias("id_b"),
-                                 F.col("doc_id").alias("ib")), "id_b")
-            .select(F.least("ia", "ib").alias("id_a"),
-                    F.greatest("ia", "ib").alias("id_b"))
-        )
-        # Intra pairs are candidates in the un-collapsed plan ONLY when
-        # the group's text yields at least one shingle band (raw token
-        # count >= K_SHINGLE: exploded_shingles emits a k-gram iff
-        # lead(k-1) exists) — a <k-token clone group has no signature,
-        # no bands, and therefore NO edge in the band-candidate
-        # semantics the oracle mirrors. The guard predicate (raw
-        # tokens(), not the distinct set in toks: 'a a a' has 3 raw
-        # tokens -> one shingle, but |distinct| = 1) was computed
-        # row-locally on the group relation and carried onto `members`
-        # by the membership join above, so the restriction here is a
-        # filter on a materialized column — no join at all (the r13
-        # form paid a members⋈banded_gids semi-join).
-        bmembers = members.where("banded")
-        intra = (
-            bmembers.select("gid", F.col("doc_id").alias("id_a"))
-            .join(bmembers.select("gid", F.col("doc_id").alias("id_b")), "gid")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        verified = inter.unionByName(intra)
-        # per-doc distinct-token count for representative election: nu
-        # is a pure function of the text, so expand the group-level
-        # size through the membership relation (a narrow bigint join)
-        # instead of tokenizing every clone.
-        nu_rel = (
-            members.join(
-                toks.select(F.col("doc_id").alias("gid"),
-                            F.size("t").cast("bigint").alias("nu")), "gid")
-            .select("doc_id", "nu")
-        )
-    else:
-        # identity membership: verified edges ARE the rep-level edges
-        # (already id_a < id_b from candidate_pairs), nu reads the
-        # materialized token-set relation directly
-        verified = gverified
-        nu_rel = toks.select("doc_id", F.size("t").cast("bigint").alias("nu"))
+    verified = expand_group_pairs(joined.where(jac >= JACCARD_THRESHOLD))
+    # per-doc distinct-token count for representative election: nu is a
+    # pure function of the text, so each group's size expands to its
+    # members instead of tokenizing every clone
+    nu_rel = toks.select(F.explode("ids").alias("doc_id"),
+                         F.size("t").cast("bigint").alias("nu"))
 
     edges = verified.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).unionAll(
         verified.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
@@ -681,102 +590,65 @@ _PMAX_SQL = "(SELECT max(doc_id) + 1 FROM documents)"
 
 
 
-# --- d03 document-arm builders (duplication-adaptive, see d03 body) ---------
+# --- d03 document arms --------------------------------------------------------
 #
-# Both builders return the six document arms
+# _d03_doc_arms returns the six document arms
 # (band, plant, ngram, simdup, contam, dupfrac) over the planted corpus
-# (originals + plants; plant ids >= poff). They compute IDENTICAL
-# results on any input: _d03_doc_arms_direct is the pre-collapse plan
-# (doc granularity; correct but C(k,2)-inflated over k-clone groups),
-# _d03_doc_arms_collapsed runs the whole substrate at unique-content
-# granularity and expands through the bigint membership relation.
-# tests/test_exact_collapse.py gates the collapsed branch against the
-# oracle on a clone corpus; tests/test_oracle_parity.py gates the
-# direct branch on the shipped (duplicate-free) corpora; and the
-# branch-equivalence test forces each branch on the other's data.
+# (originals + plants; plant ids >= poff). tests/test_exact_collapse.py
+# gates them against the oracle on a clone corpus and
+# tests/test_oracle_parity.py on the shipped duplicate-free corpora.
 
-def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (group texts substitute)
+def _d03_doc_arms(corpus, poff):
     from ..functions.dedup import minhash_signature_pairs, simhash16
-    from ..functions.text import exploded_shingles, tokens
+    from ..functions.text import exploded_shingles, shingles, tokens
 
     # EXACT-COLLAPSE-FIRST over the WHOLE document substrate (r13
-    # verdict ask #2, extending the r13 fuzzy-arm collapse — the r13
-    # sf10 ladder read this query at 16.66×/decade because the plant
-    # arm's band self-join and simdup's half-block self-join inflate
-    # C(k,2)-shaped over document clone groups, and every clone
-    # re-paid tokenize+shingle+minhash). Byte-identical texts are
-    # grouped by the 128-bit content fingerprint (map-side combinable,
-    # payloads never ride a hot key — see functions/dedup.
-    # fingerprint128); shingles, MinHash signatures, LSH bands, SimHash
-    # signatures and the contam/dupfrac counts are all pure functions
-    # of the text, so the ENTIRE substrate runs at unique-content
-    # granularity and expands through the bigint membership relation:
-    # pair arms as {expanded rep pairs} ∪ {intra-group pairs with
-    # their by-construction metric}, per-doc arms as a gid equi-join,
-    # and dupfrac's per-shingle doc count as the GROUP-SIZE-weighted
-    # sum (Σ gsz, not a group count). Output provably identical;
-    # oracle-gated on a clone corpus in tests/test_exact_collapse.py.
-    cf1, cf2 = fingerprint128("text")
-    cfp = corpus.select("doc_id", "text", cf1.alias("_f1"), cf2.alias("_f2"))
-    cgroups = (
-        cfp.groupBy("_f1", "_f2")
-        .agg(
-            F.min("doc_id").alias("gid"),
-            F.min_by("text", "doc_id").alias("text"),
-            F.count(F.lit(1)).alias("gsz"),
-            # does the group contain a plant id? (a group can in
-            # principle mix originals and plants if an original text
-            # ends in the plant suffix — id-level facts stay id-level)
-            (F.max("doc_id") >= F.lit(poff)).alias("has_plant"),
-        )
-        .transform(materialize)
-    )
-    greps = cgroups.select("gid", "text")
-    # membership (doc_id → gid) + the two row-local text flags the
-    # expansions need, carried through this one narrow join: banded =
-    # "text yields ≥1 shingle" (the d02 guard — intra pairs of a
-    # shingle-less group are NOT band candidates), hastok = "text
-    # explodes to ≥1 token" (a SimHash signature row exists; NULL text
-    # explodes to nothing on both engines). Bigints + two booleans ride
-    # the exchange, never the text. Materialized: ~10 consumers.
-    cmembers = (
-        cfp.select("doc_id", "_f1", "_f2")
-        .join(
-            cgroups.select(
-                "_f1", "_f2", "gid",
-                (F.size(tokens("text")) >= K_SHINGLE).alias("banded"),
-                (F.size(tokens("text")) >= 1).alias("hastok"),
-            ),
-            ["_f1", "_f2"],
-        )
-        .select("doc_id", "gid", "banded", "hastok")
-        .transform(materialize)
+    # verdict ask #2 — the r13 sf10 ladder read this query at
+    # 16.66×/decade because the plant arm's band self-join and simdup's
+    # half-block self-join inflate C(k,2)-shaped over document clone
+    # groups, and every clone re-paid tokenize+shingle+minhash).
+    # Byte-identical texts are grouped once (functions/dedup.dup_groups,
+    # map-side combinable; payloads never ride a hot key). Shingles,
+    # MinHash signatures, LSH bands, SimHash signatures and the
+    # contam/dupfrac counts are all pure functions of the text, so the
+    # ENTIRE substrate runs once per distinct text and each group's
+    # member-id array carries it back row-locally: per-doc arms
+    # explode(ids), pair arms expand_group_pairs over the verified
+    # group pairs — a clone group's intra pairs enter as its
+    # self-candidate (gid, gid) — and dupfrac's per-shingle doc count is
+    # the GROUP-SIZE-weighted sum (Σ size(ids), not a group count).
+    cgroups = dup_groups(
+        corpus, "doc_id", "text",
+        # does the group contain a plant id? (a group can in principle
+        # mix originals and plants if an original text ends in the
+        # plant suffix — id-level facts stay id-level)
+        (F.max("doc_id") >= F.lit(poff)).alias("has_plant"),
     )
 
     # group-granularity shingle relation, materialized once WITH the
     # 60-bit shingle hash: minhash reuses it (hash_col= — one md5 pass
-    # over (gid, shingle) removed) and dupfrac's dsh becomes a pure
+    # over (gid, shingle) removed) and dupfrac's dsh is a pure
     # projection of this checkpoint instead of its own materialization
-    # site (r14 diet: one fewer build-time checkpoint job).
+    # site.
     sh = (
-        exploded_shingles(greps, "gid", "text", K_SHINGLE)
+        exploded_shingles(cgroups, "gid", "text", K_SHINGLE)
         .withColumn("shid", portable_hash64("shingle"))
         .transform(materialize)
     )
     sig = minhash_signature_pairs(sh, "gid", hash_col="shid")
-    # the band table feeds the 'band' arm expansion AND both sides of
-    # the plant candidate self-join; has_plant rides along so the
-    # candidate prefilter below needs no extra join
+    # the band table feeds the 'band' arm AND both sides of the plant
+    # candidate self-join; has_plant and the member ids ride along so
+    # neither needs another join (the self-join projects them away
+    # before its exchange)
     bands = (
         lsh_bands(sig, "gid")
-        .join(cgroups.select("gid", "has_plant"), "gid")
+        .join(cgroups.select("gid", "has_plant", "ids"), "gid")
         .transform(materialize)
     )
-    # 'band' arm is per-doc output: expand the group's bands through
-    # membership (bands are a pure function of the text). Linear — each
-    # doc gets its n_bands rows, exactly the pre-collapse relation.
+    # 'band' arm is per-doc output: bands are a pure function of the
+    # text, so each group's rows expand to every member
     band_arm = (
-        bands.join(cmembers.select("doc_id", "gid"), "gid")
+        bands.select(F.explode("ids").alias("doc_id"), "band_id", "band_key")
         .where(F.col("doc_id") < poff)
         .select(
             F.lit("band").alias("which"),
@@ -790,8 +662,10 @@ def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (
     # verify = exact token-set Jaccard >= 0.8. All at GROUP granularity:
     # the candidate prefilter keeps group pairs where EITHER side
     # contains a plant member (necessary for the exact id-level
-    # restriction id_b >= poff, which is re-applied after expansion);
-    # tokenization is confined to the (tiny) candidate gid set via a
+    # restriction id_b >= poff, which is re-applied after expansion).
+    # A group's intra pairs are candidates iff its text yields at least
+    # one band (the same K_SHINGLE guard as d02) and it holds a plant.
+    # Tokenization is confined to the (tiny) candidate gid set via a
     # broadcast semi-join, so the verify cost is O(candidate groups).
     pa = bands.select(
         F.col("gid").alias("ga"), "band_id", "band_key",
@@ -806,65 +680,29 @@ def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (
         .where((F.col("ga") < F.col("gb")) & (F.col("hpa") | F.col("hpb")))
         .select("ga", "gb")
         .dropDuplicates(["ga", "gb"])
+        .unionByName(self_candidates(
+            cgroups, F.col("has_plant") & (F.size(tokens("text")) >= K_SHINGLE)
+        ))
     )
     g_cand_ids = g_pcands.select(
         F.explode(F.array("ga", "gb")).alias("gid")
     ).distinct()
-    ptoks = (
-        cgroups.join(F.broadcast(g_cand_ids), "gid", "leftsemi")
-        .select("gid", F.array_sort(F.array_distinct(tokens("text"))).alias("t"))
+    cand_groups = cgroups.join(F.broadcast(g_cand_ids), "gid", "leftsemi")
+    ptoks = cand_groups.select(
+        "gid", F.array_sort(F.array_distinct(tokens("text"))).alias("t"), "ids"
     )
-    pta = ptoks.select(F.col("gid").alias("ga"), F.col("t").alias("ta"))
-    ptb = ptoks.select(F.col("gid").alias("gb"), F.col("t").alias("tb"))
+    pta = ptoks.select(F.col("gid").alias("ga"), F.col("t").alias("ta"), F.col("ids").alias("ia"))
+    ptb = ptoks.select(F.col("gid").alias("gb"), F.col("t").alias("tb"), F.col("ids").alias("ib"))
     pjoined = g_pcands.join(pta, "ga").join(ptb, "gb").withColumn(
         "_inter", F.size(F.array_intersect("ta", "tb"))
     )
     pjac = F.col("_inter").cast("double") / (
         F.size("ta") + F.size("tb") - F.col("_inter")
     )
-    g_plant = (
-        pjoined.withColumn("jac", pjac)
-        .where(F.col("jac") >= _PLANT_JACCARD)
-        .select("ga", "gb", "jac")
-    )
-
-    # Membership expansion, shared by the three pair arms: group pairs
-    # → member pairs on the ORIGINAL ids (group id ranges interleave,
-    # so least/greatest — not the gid order — restores id_a < id_b);
-    # each doc belongs to exactly one group, so no pair is emitted
-    # twice. Only bigints and the verified metric ride these joins.
-    ma = cmembers.select(F.col("gid").alias("ga"), F.col("doc_id").alias("ia"))
-    mb = cmembers.select(F.col("gid").alias("gb"), F.col("doc_id").alias("ib"))
-
-    def _expand_pairs(gpairs, vname):
-        return (
-            gpairs.join(ma, "ga").join(mb, "gb")
-            .select(
-                F.least("ia", "ib").alias("id_a"),
-                F.greatest("ia", "ib").alias("id_b"),
-                vname,
-            )
-        )
-
-    # Intra-group pairs for plant/ngram: candidates in the un-collapsed
-    # plan iff the group's text yields at least one band (banded — the
-    # same K_SHINGLE guard as d02) and the pair touches a plant
-    # (id_b >= poff, pushed to the b side before the self-join); both
-    # Jaccard verifies equal exactly 1.0 for identical texts
-    # (size(t)/(2·size(t) − size(t))), so no verify is computed.
-    bm = cmembers.where("banded")
-    intra_pn = (
-        bm.select("gid", F.col("doc_id").alias("id_a"))
-        .join(bm.select("gid", F.col("doc_id").alias("id_b")), "gid")
-        .where((F.col("id_a") < F.col("id_b")) & (F.col("id_b") >= poff))
-        .select("id_a", "id_b", F.lit(1.0).alias("jac"))
-    )
-
-    plant_pairs = (
-        _expand_pairs(g_plant, "jac")
-        .where(F.col("id_b") >= poff)
-        .unionByName(intra_pn)
-    )
+    plant_pairs = expand_group_pairs(
+        pjoined.withColumn("jac", pjac).where(F.col("jac") >= _PLANT_JACCARD),
+        "jac",
+    ).where(F.col("id_b") >= poff)
     plant_arm = plant_pairs.select(
         F.lit("plant").alias("which"),
         F.col("id_a").cast("bigint").alias("k1"),
@@ -880,33 +718,22 @@ def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (
     # 'ngram' arm: the same candidates verified on exact 3-gram SHINGLE
     # Jaccard — the order-sensitive n-gram similarity MinHash actually
     # approximates. The lambda-form shingles() is fine here: it runs on
-    # the candidate gid set only, never the corpus. Intra pairs verify
-    # at exactly 1.0 as well (identical shingle arrays, non-empty by
-    # the banded guard), so intra_pn serves both arms.
-    from ..functions.text import shingles
-
-    psh = (
-        cgroups.join(F.broadcast(g_cand_ids), "gid", "leftsemi")
-        .select("gid", F.array_sort(shingles("text", K_SHINGLE)).alias("s"))
+    # the candidate gid set only, never the corpus.
+    psh = cand_groups.select(
+        "gid", F.array_sort(shingles("text", K_SHINGLE)).alias("s"), "ids"
     )
-    sha = psh.select(F.col("gid").alias("ga"), F.col("s").alias("sa_sh"))
-    shb = psh.select(F.col("gid").alias("gb"), F.col("s").alias("sb_sh"))
+    sha = psh.select(F.col("gid").alias("ga"), F.col("s").alias("sa_sh"), F.col("ids").alias("ia"))
+    shb = psh.select(F.col("gid").alias("gb"), F.col("s").alias("sb_sh"), F.col("ids").alias("ib"))
     njoined = g_pcands.join(sha, "ga").join(shb, "gb").withColumn(
         "_ninter", F.size(F.array_intersect("sa_sh", "sb_sh"))
     )
     njac = F.col("_ninter").cast("double") / (
         F.size("sa_sh") + F.size("sb_sh") - F.col("_ninter")
     )
-    g_ngram = (
-        njoined.withColumn("jac", njac)
-        .where(F.col("jac") >= _PLANT_JACCARD)
-        .select("ga", "gb", "jac")
-    )
-    ngram_pairs = (
-        _expand_pairs(g_ngram, "jac")
-        .where(F.col("id_b") >= poff)
-        .unionByName(intra_pn)
-    )
+    ngram_pairs = expand_group_pairs(
+        njoined.withColumn("jac", njac).where(F.col("jac") >= _PLANT_JACCARD),
+        "jac",
+    ).where(F.col("id_b") >= poff)
     ngram_arm = ngram_pairs.select(
         F.lit("ngram").alias("which"),
         F.col("id_a").cast("bigint").alias("k1"),
@@ -919,8 +746,10 @@ def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (
     # gid < poff (gid = min member id; plants sit above poff), and the
     # SimHash signature is a pure function of the text — compute it per
     # original-bearing group, self-join blocks at group granularity,
-    # expand through the ORIGINAL members.
-    og = cgroups.where(F.col("gid") < poff)
+    # expand over the group's ORIGINAL members only (ids narrowed).
+    og = cgroups.where(F.col("gid") < poff).select(
+        "gid", "text", F.filter("ids", lambda x: x < poff).alias("ids")
+    )
     o_ssig = simhash16(
         og.select("gid", tokens("text").alias("t")), "gid", F.col("t"), nbits=32
     )
@@ -953,38 +782,26 @@ def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (
     # verify BEFORE deduping: the Hamming test is a map-side expression,
     # so filtering first shrinks the pair-dedup shuffle to the surviving
     # pairs; a Hamming-1 pair can share BOTH blocks, hence the dedup —
-    # bare gids + 32-bit sigs ride the shuffle, nothing wider
+    # bare gids + 32-bit sigs ride the shuffle, nothing wider. A clone
+    # group's self-candidate has Hamming 0 and exists iff a signature
+    # row does — i.e. the text explodes to ≥1 token (NULL text
+    # aggregates to no row on both engines).
     ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
     g_scands = (
         a.join(b, ["part", "bkey"])
         .where((F.col("ga") < F.col("gb")) & (ham <= _SIMDUP_HAMMING))
         .select("ga", "gb", ham.alias("hm"))
         .dropDuplicates(["ga", "gb"])
-    )
-    # Expansion over ORIGINAL members only. Intra pairs: clones have
-    # identical signatures (Hamming 0, sharing both blocks), candidates
-    # in the un-collapsed plan iff a signature row EXISTS — i.e. the
-    # text explodes to ≥1 token (the hastok flag; NULL text aggregates
-    # to no row on both engines).
-    om = cmembers.where(F.col("doc_id") < poff)
-    moa = om.select(F.col("gid").alias("ga"), F.col("doc_id").alias("ia"))
-    mob = om.select(F.col("gid").alias("gb"), F.col("doc_id").alias("ib"))
-    sim_inter = (
-        g_scands.join(moa, "ga").join(mob, "gb")
-        .select(
-            F.least("ia", "ib").alias("id_a"),
-            F.greatest("ia", "ib").alias("id_b"),
-            "hm",
+        .unionByName(
+            self_candidates(og, F.size(tokens("text")) >= 1).withColumn("hm", F.lit(0))
         )
     )
-    tm = om.where("hastok")
-    sim_intra = (
-        tm.select("gid", F.col("doc_id").alias("id_a"))
-        .join(tm.select("gid", F.col("doc_id").alias("id_b")), "gid")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(0).alias("hm"))
-    )
-    simdup_arm = sim_inter.unionByName(sim_intra).select(
+    simdup_arm = expand_group_pairs(
+        g_scands
+        .join(og.select(F.col("gid").alias("ga"), F.col("ids").alias("ia")), "ga")
+        .join(og.select(F.col("gid").alias("gb"), F.col("ids").alias("ib")), "gb"),
+        "hm",
+    ).select(
         F.lit("simdup").alias("which"),
         F.col("id_a").cast("bigint").alias("k1"),
         F.col("id_b").cast("bigint").alias("k2"),
@@ -996,15 +813,17 @@ def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (
     # id + 2*poff with one appended token — detection has a known
     # answer). n_shared is a pure function of the text (given the eval
     # shingle set), so it is computed ONCE per distinct text and
-    # expanded to the id-filtered train docs through membership:
-    # eval/train membership is an ID property (doc_id % mod), the
-    # shared-shingle count is a TEXT property. The eval side's
-    # distinct-shingle set is tiny by nature (eval sets are small) →
-    # broadcast semi-joins, same as before the collapse; per-group
-    # distinctness of exploded_shingles makes count(*) the
+    # expanded to the group's id-filtered train members: eval/train
+    # membership is an ID property (doc_id % mod), the shared-shingle
+    # count is a TEXT property. The eval side's distinct-shingle set is
+    # tiny by nature (eval sets are small) → broadcast semi-joins;
+    # per-group distinctness of exploded_shingles makes count(*) the
     # distinct-shared count.
-    evm = om.where(F.col("doc_id") % _CONTAM_EVAL_MOD == 0).select("doc_id", "gid")
-    egids = evm.select("gid").distinct()
+    egroups = og.select(
+        "gid", "text",
+        F.filter("ids", lambda x: x % _CONTAM_EVAL_MOD == 0).alias("eids"),
+    ).where(F.size("eids") > 0)
+    egids = egroups.select("gid")
     ev_sh = (
         sh.join(F.broadcast(egids), "gid", "leftsemi")
         .select("shingle").distinct()
@@ -1014,19 +833,16 @@ def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (
         .groupBy("gid")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    orig_train = (
-        om.where(F.col("doc_id") % _CONTAM_EVAL_MOD != 0)
-        .select("doc_id", "gid")
-        .join(g_nsh, "gid")
-        .select("doc_id", "n_shared")
-    )
+    orig_train = g_nsh.join(
+        og.select("gid", F.filter("ids", lambda x: x % _CONTAM_EVAL_MOD != 0).alias("tids")),
+        "gid",
+    ).select(F.explode("tids").alias("doc_id"), "n_shared")
     # Leaked docs' texts (eval text + the leak token) are their own
     # clone groups, keyed here by the SOURCE group: leaked docs of
     # clone eval docs are clones of each other, so one shingle pass
     # per distinct eval text covers every leaked row.
-    l_texts = (
-        cgroups.join(F.broadcast(egids), "gid", "leftsemi")
-        .select("gid", F.concat(F.col("text"), F.lit(f" {_LEAK_SUFFIX}")).alias("ltext"))
+    l_texts = egroups.select(
+        "gid", F.concat(F.col("text"), F.lit(f" {_LEAK_SUFFIX}")).alias("ltext")
     )
     l_nsh = (
         exploded_shingles(l_texts, "gid", "ltext", K_SHINGLE)
@@ -1034,10 +850,9 @@ def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (
         .groupBy("gid")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    leak_train = (
-        evm.select((F.col("doc_id") + F.lit(2 * poff)).alias("doc_id"), "gid")
-        .join(l_nsh, "gid")
-        .select("doc_id", "n_shared")
+    leak_train = l_nsh.join(egroups.select("gid", "eids"), "gid").select(
+        F.explode(F.transform("eids", lambda x: x + F.lit(2 * poff))).alias("doc_id"),
+        "n_shared",
     )
     contam_arm = (
         orig_train.unionByName(leak_train)
@@ -1056,14 +871,14 @@ def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (
     # planted original gates dupfrac == 1.0 exactly and its plant
     # k/(k+1); unplanted docs report their natural overlap. At group
     # granularity the per-shingle doc count is the GROUP-SIZE-WEIGHTED
-    # sum (nd = Σ gsz over groups containing the shingle — each member
-    # doc contains it once, shingles being per-doc distinct), and the
-    # per-group (n_sh, n_dup) expand to every member. dsh reads the
-    # precomputed 60-bit hash off the materialized shingle relation —
-    # a projection of cached blocks, not a checkpoint of its own.
+    # sum (nd = Σ size(ids) over groups containing the shingle — each
+    # member doc contains it once, shingles being per-doc distinct),
+    # and the per-group (n_sh, n_dup) expand to every member. dsh reads
+    # the precomputed 60-bit hash off the materialized shingle relation
+    # — a projection of cached blocks, not a checkpoint of its own.
     g_dsh = sh.select("gid", "shid")
     shc = (
-        g_dsh.join(cgroups.select("gid", "gsz"), "gid")
+        g_dsh.join(cgroups.select("gid", F.size("ids").alias("gsz")), "gid")
         .groupBy("shid")
         .agg(F.sum("gsz").alias("nd"))
     )
@@ -1076,195 +891,8 @@ def _d03_doc_arms_collapsed(corpus, docs, poff):  # noqa: ARG001 - docs unused (
         )
     )
     dupfrac_arm = (
-        cmembers.select("doc_id", "gid")
-        .join(g_df, "gid")
-        .select(
-            F.lit("dupfrac").alias("which"),
-            F.col("doc_id").cast("bigint").alias("k1"),
-            F.col("n_dup").cast("bigint").alias("k2"),
-            # round-then-format, module tie policy
-            F.format_string(
-                "%.6f", F.round(F.col("n_dup") / F.col("n_sh"), 6)
-            ).alias("v"),
-        )
-    )
-    return band_arm, plant_arm, ngram_arm, simdup_arm, contam_arm, dupfrac_arm
-
-
-
-def _d03_doc_arms_direct(corpus, docs, poff):
-    from ..functions.dedup import minhash_signature_pairs, simhash16
-    from ..functions.text import exploded_shingles, shingles, tokens
-
-    # Pre-collapse plan shape (doc granularity): correct on ANY corpus,
-    # chosen when the duplication probe found no exact-duplicate text
-    # group — the membership expansion would be the identity and the
-    # collapse machinery pure fixed overhead (measured +1.6 s at
-    # sf0.1). Shingle relation materialized once WITH the 60-bit hash:
-    # minhash reuses it (hash_col=) and dupfrac's dsh is a projection
-    # of this checkpoint, not a second materialization site.
-    sh = (
-        exploded_shingles(corpus, "doc_id", "text", K_SHINGLE)
-        .withColumn("shid", portable_hash64("shingle"))
-        .transform(materialize)
-    )
-    sig = minhash_signature_pairs(sh, "doc_id", hash_col="shid")
-    # the band table feeds the arm output AND both sides of the plant
-    # candidate self-join — lazy checkpoint, same diamond hygiene as d02
-    bands = lsh_bands(sig, "doc_id").transform(materialize)
-    band_arm = bands.where(F.col("doc_id") < poff).select(
-        F.lit("band").alias("which"),
-        F.col("doc_id").cast("bigint").alias("k1"),
-        F.col("band_id").cast("bigint").alias("k2"),
-        F.col("band_key").alias("v"),
-    )
-
-    # 'plant' arm: candidates = band-key collisions touching a plant;
-    # verify = exact token-set Jaccard >= 0.8 — tokenization is confined
-    # to the (tiny) candidate id set via a broadcast semi-join, so the
-    # verify cost is O(candidates), not another corpus pass.
-    pa = bands.select(F.col("doc_id").alias("id_a"), "band_id", "band_key")
-    pb = bands.select(F.col("doc_id").alias("id_b"), "band_id", "band_key")
-    pcands = (
-        pa.join(pb, ["band_id", "band_key"])
-        .where((F.col("id_a") < F.col("id_b")) & (F.col("id_b") >= poff))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cand_ids = pcands.select(
-        F.explode(F.array("id_a", "id_b")).alias("doc_id")
-    ).distinct()
-    ptoks = (
-        corpus.join(F.broadcast(cand_ids), "doc_id", "leftsemi")
-        .select("doc_id", F.array_sort(F.array_distinct(tokens("text"))).alias("t"))
-    )
-    pta = ptoks.select(F.col("doc_id").alias("id_a"), F.col("t").alias("ta"))
-    ptb = ptoks.select(F.col("doc_id").alias("id_b"), F.col("t").alias("tb"))
-    pjoined = pcands.join(pta, "id_a").join(ptb, "id_b").withColumn(
-        "_inter", F.size(F.array_intersect("ta", "tb"))
-    )
-    pjac = F.col("_inter").cast("double") / (
-        F.size("ta") + F.size("tb") - F.col("_inter")
-    )
-    plant_arm = (
-        pjoined.withColumn("jac", pjac)
-        .where(F.col("jac") >= _PLANT_JACCARD)
-        .select(
-            F.lit("plant").alias("which"),
-            F.col("id_a").cast("bigint").alias("k1"),
-            F.col("id_b").cast("bigint").alias("k2"),
-            # round BEFORE formatting (module tie policy)
-            F.format_string("%.6f", F.round(F.col("jac"), 6)).alias("v"),
-        )
-    )
-
-    # 'ngram' arm: the same candidates verified on exact 3-gram SHINGLE
-    # Jaccard. The lambda-form shingles() runs on the candidate id set
-    # only, never the corpus.
-    psh = (
-        corpus.join(F.broadcast(cand_ids), "doc_id", "leftsemi")
-        .select("doc_id", F.array_sort(shingles("text", K_SHINGLE)).alias("s"))
-    )
-    sha = psh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa_sh"))
-    shb = psh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb_sh"))
-    njoined = pcands.join(sha, "id_a").join(shb, "id_b").withColumn(
-        "_ninter", F.size(F.array_intersect("sa_sh", "sb_sh"))
-    )
-    njac = F.col("_ninter").cast("double") / (
-        F.size("sa_sh") + F.size("sb_sh") - F.col("_ninter")
-    )
-    ngram_arm = (
-        njoined.withColumn("jac", njac)
-        .where(F.col("jac") >= _PLANT_JACCARD)
-        .select(
-            F.lit("ngram").alias("which"),
-            F.col("id_a").cast("bigint").alias("k1"),
-            F.col("id_b").cast("bigint").alias("k2"),
-            F.format_string("%.6f", F.round(F.col("jac"), 6)).alias("v"),
-        )
-    )
-
-    # 'simdup' (originals only): per-doc 32-bit SimHash, half-block
-    # candidate generation, Hamming verify before the pair dedup
-    ssig = simhash16(
-        docs.select("doc_id", tokens("text").alias("t")), "doc_id", F.col("t"), nbits=32
-    )
-    blocks = ssig.select(
-        "doc_id", "simhash",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("part"),
-                    F.shiftright("simhash", 16).bitwiseAND(F.lit(65535)).alias("bkey"),
-                ),
-                F.struct(
-                    F.lit(1).alias("part"),
-                    F.col("simhash").bitwiseAND(F.lit(65535)).alias("bkey"),
-                ),
-            )
-        ).alias("_b"),
-    ).select("doc_id", "simhash", F.col("_b.part").alias("part"), F.col("_b.bkey").alias("bkey"))
-    blocks = blocks.transform(materialize)
-    a = blocks.select(
-        F.col("doc_id").alias("id_a"), F.col("simhash").alias("sa"), "part", "bkey"
-    )
-    b = blocks.select(
-        F.col("doc_id").alias("id_b"), F.col("simhash").alias("sb"), "part", "bkey"
-    )
-    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    scands = (
-        a.join(b, ["part", "bkey"])
-        .where((F.col("id_a") < F.col("id_b")) & (ham <= _SIMDUP_HAMMING))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    simdup_arm = scands.select(
-        F.lit("simdup").alias("which"),
-        F.col("id_a").cast("bigint").alias("k1"),
-        F.col("id_b").cast("bigint").alias("k2"),
-        ham.cast("string").alias("v"),
-    )
-
-    # 'contam': per-doc distinct-shared-shingle counts off the same
-    # materialized shingle relation; eval set broadcast (tiny by nature)
-    orig_sh = sh.where(F.col("doc_id") < poff)
-    ev_sh = (
-        orig_sh.where(F.col("doc_id") % _CONTAM_EVAL_MOD == 0)
-        .select("shingle").distinct()
-    )
-    leaked = docs.where(F.col("doc_id") % _CONTAM_EVAL_MOD == 0).select(
-        (F.col("doc_id") + F.lit(2 * poff)).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(f" {_LEAK_SUFFIX}")).alias("text"),
-    )
-    train_sh = (
-        orig_sh.where(F.col("doc_id") % _CONTAM_EVAL_MOD != 0)
-        .select("doc_id", "shingle")
-        .unionByName(exploded_shingles(leaked, "doc_id", "text", K_SHINGLE))
-    )
-    contam_arm = (
-        train_sh
-        .join(F.broadcast(ev_sh), "shingle", "leftsemi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= _CONTAM_MIN_SHARED)
-        .select(
-            F.lit("contam").alias("which"),
-            F.col("doc_id").cast("bigint").alias("k1"),
-            F.col("n_shared").cast("bigint").alias("k2"),
-            F.lit(None).cast("string").alias("v"),
-        )
-    )
-
-    # 'dupfrac': per-doc duplicate-shingle fraction over the planted
-    # corpus; dsh reads the precomputed hash off the shingle checkpoint
-    dsh = sh.select("doc_id", "shid")
-    shc = dsh.groupBy("shid").agg(F.count(F.lit(1)).alias("nd"))
-    dupfrac_arm = (
-        dsh.join(shc, "shid")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_sh"),
-            F.sum(F.when(F.col("nd") >= 2, 1).otherwise(0)).alias("n_dup"),
-        )
+        g_df.join(cgroups.select("gid", "ids"), "gid")
+        .select(F.explode("ids").alias("doc_id"), "n_sh", "n_dup")
         .select(
             F.lit("dupfrac").alias("which"),
             F.col("doc_id").cast("bigint").alias("k1"),
@@ -1443,17 +1071,12 @@ def d03_minhash_lsh(spark, sf_dir):
     per doc, computed over 60-bit shingle hashes so the corpus-scale
     shuffles move bigints, not shingle strings.
 
-    r14: the document substrate is DUPLICATION-ADAPTIVE — when the
-    corpus contains exact-duplicate text groups, shingles, MinHash,
-    bands, SimHash and the contam/dupfrac counts all run at
-    unique-content granularity behind a fingerprint-keyed exact
-    collapse and expand through the bigint membership relation (pair
-    arms as rep pairs ∪ intra pairs, per-doc arms as a gid equi-join,
-    dupfrac's per-shingle doc count group-size-weighted); on a
-    duplicate-free corpus the pre-collapse doc-granularity plan runs
-    instead. See functions.dedup.has_dup_groups and the two
-    _d03_doc_arms_* builders
-    above."""
+    The document substrate runs once per distinct text behind an
+    exact collapse (functions.dedup.dup_groups) and expands through
+    each group's member-id array: pair arms as verified group pairs
+    (self-candidates included) exploded to member pairs, per-doc arms
+    as explode(ids), dupfrac's per-shingle doc count
+    group-size-weighted. See _d03_doc_arms above."""
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     # plant-id offset = max(doc_id) + 1, computed (one pruned max scan,
     # mirrored by the oracle's scalar subquery) so the id-space test
@@ -1468,34 +1091,10 @@ def d03_minhash_lsh(spark, sf_dir):
     )
     corpus = docs.select("doc_id", "text").unionByName(plants)
 
-    # DUPLICATION-ADAPTIVE exact collapse (r13 verdict ask #2 + ask #3):
-    # the document substrate runs at unique-content granularity when the
-    # corpus actually CONTAINS exact-duplicate groups, and at plain doc
-    # granularity (the pre-collapse plan shape) when it does not. Both
-    # branches compute identical results on any input — the collapse is
-    # purely a performance choice (guide §1.2), so the decision is a
-    # stats-driven plan choice, the same move AQE makes one level down:
-    # one bigint-only fingerprint aggregate (map-side combinable),
-    # executed at plan-build time from the live parquet input, never
-    # cached across runs. On a duplicate-free corpus the collapse
-    # machinery is pure fixed overhead (measured +1.6 s at sf0.1 —
-    # OPTIMIZATION_r14.md); on a clone-heavy corpus the direct plan is
-    # super-linear (the r13 sf10 ladder read 16.66x/decade from the
-    # band/half-block self-joins inflating over clone groups). The
-    # probe reads the RAW document scan, not the spread()+plants
-    # corpus: spread's repartition would put a full text exchange
-    # inside the probe, and the plants' duplication structure mirrors
-    # their sources' (a plant text duplicates iff its source text
-    # does), so probing originals decides for the whole corpus.
-    collapsed = has_dup_groups(
-        load_table(spark, sf_dir, "documents").select("text"), "text"
-    )
     (
         band_arm, plant_arm, ngram_arm, simdup_arm, contam_arm,
         dupfrac_arm,
-    ) = (_d03_doc_arms_collapsed if collapsed else _d03_doc_arms_direct)(
-        corpus, docs, poff
-    )
+    ) = _d03_doc_arms(corpus, poff)
 
     # 'fuzzy' arm: FUZZY STRING JOIN (entity resolution) — short-string
     # matching under edit distance via DELETION-NEIGHBORHOOD blocking:
@@ -1521,8 +1120,6 @@ def d03_minhash_lsh(spark, sf_dir):
                 F.expr("substring(p_name, 2)").alias("name"),
             )
         )
-        # single consumer (the fingerprinted fz_fp relation below,
-        # which is itself materialized) — no checkpoint needed
     )
     from ..functions.dedup import fuzzy_candidates
 
@@ -1532,76 +1129,32 @@ def d03_minhash_lsh(spark, sf_dir):
     # deletion signatures, so every signature block holds whole clone
     # groups and the block self-join + the per-pair levenshtein verify
     # pay C(k,2)-shaped work for pairs whose distance is 0 by
-    # construction. Group names first, run signature-join + levenshtein
-    # at UNIQUE-NAME granularity (~128 names incl. plants), and expand
-    # membership afterwards; the plant restriction (id_b >= foff) is
-    # applied AFTER expansion because a group may in principle mix
-    # originals and plants (the filter is id-level, the group is
-    # name-level). Provably output-identical: identical names ⇒
-    # identical signatures ⇒ the doc-level candidate set is exactly
-    # {expanded rep pairs} ∪ {intra-group pairs}, and levenshtein is a
-    # function of the two names, which expansion preserves (intra
-    # pairs: levenshtein(n, n) = 0 ≤ 1, v = '0').
-    #
-    # RE-KEYED on the 128-bit content fingerprint (r13 verdict ask #1,
-    # same mechanism as d02): groupBy(fp) + min/min_by collapses the
-    # ~312-clone name groups MAP-SIDE — the r13 window form shuffled
-    # every (id, name) row to one reducer per distinct name with no
-    # partial aggregation.
-    ff1, ff2 = fingerprint128("name")
-    # fz_fp embeds twice (the group agg + the members join) — left
-    # unmaterialized on purpose: re-running a 20k-row scan + row-local
-    # hash twice is far cheaper than another checkpoint site's
-    # build-time stage materialization (r13 planning-tax finding).
-    fz_fp = fz_corpus.select(
-        "id", "name", ff1.alias("_f1"), ff2.alias("_f2")
+    # construction. Group names first (dup_groups: ~312-clone groups
+    # combine map-side), run signature-join + levenshtein once per
+    # group pair (~128 names incl. plants, plus each multi-member
+    # group's self-candidate), and expand the member-id arrays; the
+    # plant restriction (id_b >= foff) is applied AFTER expansion
+    # because a group may in principle mix originals and plants (the
+    # filter is id-level, the group is name-level). Output-identical:
+    # identical names ⇒ identical signatures, and levenshtein is a
+    # function of the two names, which expansion preserves.
+    fz_groups = dup_groups(fz_corpus, "id", "name")
+    g_cands = (
+        fuzzy_candidates(fz_groups, "gid", "name")
+        .select(F.col("id_a").alias("ga"), F.col("id_b").alias("gb"))
+        .unionByName(self_candidates(fz_groups))
     )
-    fz_groups = (
-        fz_fp.groupBy("_f1", "_f2")
-        .agg(F.min("id").alias("gid"), F.min_by("name", "id").alias("name"))
-        .transform(materialize)
-    )
-    fz_reps = fz_groups.select(F.col("gid").alias("id"), "name")
-    # fz_members embeds four times (two inter-expansion sides, the
-    # intra self-join's two sides) — left unmaterialized on purpose:
-    # each embed is a broadcast join of the (tiny, checkpointed)
-    # fz_groups against a 20k-row scan, far cheaper than another
-    # checkpoint site's build-time stage materialization.
-    fz_members = (
-        fz_fp.select("id", "_f1", "_f2")
-        .join(F.broadcast(fz_groups.select("_f1", "_f2", "gid")), ["_f1", "_f2"])
-        .select("id", "gid")
-    )
-    g_cands = fuzzy_candidates(fz_reps, "id", "name")
+    na = fz_groups.select(F.col("gid").alias("ga"), F.col("name").alias("name_a"),
+                          F.col("ids").alias("ia"))
+    nb = fz_groups.select(F.col("gid").alias("gb"), F.col("name").alias("name_b"),
+                          F.col("ids").alias("ib"))
     g_verified = (
-        g_cands.join(
-            fz_reps.select(F.col("id").alias("id_a"), F.col("name").alias("name_a")), "id_a"
-        )
-        .join(
-            fz_reps.select(F.col("id").alias("id_b"), F.col("name").alias("name_b")), "id_b"
-        )
+        g_cands.join(na, "ga").join(nb, "gb")
         .withColumn("dist", F.levenshtein("name_a", "name_b"))
         .where(F.col("dist") <= 1)
-        .select("id_a", "id_b", "dist")
-    )
-    fz_inter = (
-        g_verified
-        .join(fz_members.select(F.col("gid").alias("id_a"),
-                                F.col("id").alias("ia")), "id_a")
-        .join(fz_members.select(F.col("gid").alias("id_b"),
-                                F.col("id").alias("ib")), "id_b")
-        .select(F.least("ia", "ib").alias("id_a"),
-                F.greatest("ia", "ib").alias("id_b"),
-                "dist")
-    )
-    fz_intra = (
-        fz_members.select("gid", F.col("id").alias("id_a"))
-        .join(fz_members.select("gid", F.col("id").alias("id_b")), "gid")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.lit(0).alias("dist"))
     )
     fuzzy_arm = (
-        fz_inter.unionByName(fz_intra)
+        expand_group_pairs(g_verified, "dist")
         .where(F.col("id_b") >= F.lit(foff))
         .select(
             F.lit("fuzzy").alias("which"),

@@ -69,7 +69,7 @@ def get_spark(
         # ~155 distinct classes and corpus_dedup (e02) ~170, so with 100
         # entries every repeat pass recompiled 117 and ~160 of them (plus
         # the JIT work on the fresh bytecode); with 1024 it recompiles 0
-        # and ~15 (classes whose source differs per pass)
+        # for both
         .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
